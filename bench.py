@@ -192,11 +192,6 @@ def main():
             qs[n](spark, sf_dir).write.format("noop") \
                 .mode("overwrite").save()
 
-        # r4 renames (queries() consolidated to 50 entries):
-        # lsh_pairs → lsh_jaccard (pairs + verify), exact_dedup +
-        # simhash → doc_hashes, token_stats → text_stats (+bpe+lang).
-        # r5: ann_cosine_topk → ann_approx_topk (method='exact' arm);
-        # semantic_dedup is new.
         for name in ("seen_antijoin", "pricing_summary", "top_revenue",
                      "first_wins_dedup", "politeness_topk", "minhash_sig",
                      "lsh_jaccard", "ann_approx_topk", "doc_hashes",
@@ -204,14 +199,8 @@ def main():
                      "gopher_quality", "tfidf_top_terms",
                      "decontam_overlap", "unigram_logprob",
                      "training_mix", "events_asof",
-                     "events_range_count",
-                     # new in round 4
-                     "paragraph_dedup",
-                     # new in round 5
-                     "semantic_dedup",
-                     # new in round 6 (html_clean folded into
-                     # text_stats; its slot grades ExactSubstr)
-                     "substring_dedup"):
+                     "events_range_count", "paragraph_dedup",
+                     "semantic_dedup", "substring_dedup"):
             # two runs each: min → `queries`, both → `spread`
             timed(name, lambda n=name: run_query(n))
             timed(name, lambda n=name: run_query(n))
@@ -249,34 +238,6 @@ def main():
         # the same run (ann.recall_at_k over ann_approx_topk's
         # tagged union)
         "ann_recall_at_3": ann_recall,
-        # round-1 numbers for these map-only queries timed a count()
-        # that let Catalyst prune the output columns — they measured
-        # the scan, not the operator, and are NOT comparable to the
-        # noop-sink timings used since round 2 (BENCH/BASELINE.md)
-        "void_queries_r1": ["minhash_sig", "token_stats", "simhash",
-                            "exact_dedup", "ann_cosine_topk"],
-        # round-4 query consolidation (old name → new home)
-        "renamed_r4": {"lsh_pairs": "lsh_jaccard",
-                       "ngram_jaccard": "lsh_jaccard",
-                       "exact_dedup": "doc_hashes",
-                       "fingerprint": "doc_hashes",
-                       "simhash": "doc_hashes",
-                       "token_stats": "text_stats",
-                       "bpe_token_count": "text_stats",
-                       "lang_guess": "text_stats",
-                       "ann_ivf_topk": "ann_approx_topk",
-                       "ann_lsh_topk": "ann_approx_topk",
-                       "header_get": "mhtml_meta",
-                       "text_sha": "mhtml_meta",
-                       "crawl_rollup": "temporal_report",
-                       "events_daily": "temporal_report",
-                       "part_above_avg": "pricing_summary"},
-        # round-5: the exact ANN baseline joined the tagged union
-        "renamed_r5": {"ann_cosine_topk": "ann_approx_topk"},
-        # round-6: html_clean's byte-compared tag-strip now rides
-        # text_stats (html_clean_text column); its query slot grades
-        # substring_dedup (ExactSubstr spans)
-        "renamed_r6": {"html_clean": "text_stats"},
     }))
     summary = json.dumps({
         "metric": "frontier URLs scheduled+parsed/sec "
@@ -298,7 +259,7 @@ def main():
                  "substring_dedup is NEW in the timed set (~2.5s — "
                  "the total grew by a new query, not a regression); "
                  "unigram_logprob is now per-language (heavier by "
-                 "design); html_clean rides text_stats (renamed_r6); "
+                 "design); html_clean rides text_stats; "
                  "frontier_schedule_parse retains the r5 pruned "
                  "robots gate (~+0.5s measured insurance). Compare "
                  "cpu_probe_sec to BENCH/BASELINE.md (~0.23s quiet) "

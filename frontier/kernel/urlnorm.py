@@ -24,13 +24,11 @@ seen-set slot. Rules (documented, deterministic, order-independent):
 7. path ``.``/``..`` segments resolved (``..`` at the root is
    dropped); empty path → ``/``
 
-The spec is deliberately expressible BOTH as vectorized Python (this
-module — ``pandas.Series.map`` inside Arrow batches) and as a pure
-Catalyst expression chain (frontier/spark/urlcanon.py). The two are
-differential-tested property-for-property (tests/test_urlcanon_jvm.py)
-so either can serve as the oracle for the other; the JVM form is the
-default in the scheduler because it scales with executor cores instead
-of Python workers.
+The scheduler runs this module inside Arrow batches
+(``schedule.with_url_canon`` — ``pandas.Series.map`` per batch).
+The host rules are also expressed as a pure Catalyst chain
+(``frontier/spark/urlcanon.host_expr``, for the robots prune);
+tests/test_urlcanon.py checks both Spark paths against this module.
 """
 
 from __future__ import annotations

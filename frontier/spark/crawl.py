@@ -62,22 +62,15 @@ r3 VERDICT item 3 — measured ~15-25 s/round of pure Catalyst work):
 * round state materializes via LAZY ``localCheckpoint`` (:func:`_ckpt`)
   so every downstream plan is a shallow LogicalRDD — ``persist()``
   kept full logical lineage and every consumer re-analyzed it;
-* a checkpoint BARRIER sits between the staged canon projection and
-  the discovery aggregate — column pruning + CollapseProject
-  otherwise inline the ~30 staged steps into one combinatorially-
-  duplicated expression (5-25 s per plan to re-optimize);
 * ``spark.sql.constraintPropagation.enabled=false`` (session.py) —
-  PruneFilters spent 10.6 s/plan deriving constraints over the canon
-  expression with zero effective rewrites (Catalyst rule dump);
+  PruneFilters spent 10.6 s/plan deriving constraints with zero
+  effective rewrites (Catalyst rule dump);
 * snapshot table writes run CONCURRENTLY (snapshots.commit) so one
   write's plan compile overlaps another's execution;
 * cached blocks are freed per round by draining the crawl-private
   list of checkpointed RDD handles (_CKPT_LIVE; localCheckpoint
   blocks otherwise free only on driver GC — and a registry-wide
   diff would drop concurrent jobs' caches, r4 ADVICE).
-
-Measured: 8M-page 2-round crawl 122.8→76.9 s at 8-wide, 89.5→73.0 s
-at 32-wide (jvm canon; BENCH/scaling_crawl_raw.md).
 """
 
 from __future__ import annotations
@@ -108,7 +101,7 @@ def prepare_page_index(pages: DataFrame) -> DataFrame:
             .dropDuplicates(["url_canon"]))
 
 
-# Measured (bench/scaling_crawl.py, 2M pages, 1M-row batch): the
+# Measured (BENCH/scaling_crawl_raw.md, 2M pages, 1M-row batch): the
 # co-partitioned fetch beats broadcast end-to-end at 1M rows already
 # (41 s vs 57 s for a 2-round crawl) — driver hash-relation build +
 # per-task rebuild dwarf the slim-batch shuffle well before the
@@ -396,26 +389,12 @@ def _crawl_round(spark, round_no, frontier, robots, page_index, store,
     :func:`_ckpt`; the caller frees the blocks in a finally (round-2
     ADVICE: an exception between checkpoint and commit must not leak
     cached partitions)."""
-    import os as _os
-    import time as _time
-    if _os.environ.get("FRONTIER_DEBUG_TIMING"):
-        _t = [_time.perf_counter()]
-
-        def _lap(msg):
-            now = _time.perf_counter()
-            print(f"[round {round_no}] {msg}: {now - _t[0]:.2f}s",
-                  flush=True)
-            _t[0] = now
-    else:
-        def _lap(msg):
-            pass
     # 1. (robots already enforced at frontier entry — every frontier
     # row is allowed by invariant; see _gate_frontier below.)
     # slim (no page bytes) and consumed twice — the politeness cut
     # AND the leftover anti-join inside the frontier write; without
     # the checkpoint the host chain recomputes at commit time
     staged = _ckpt(sched.with_host(frontier))
-    _lap("staged built")
 
     # 2. politeness budget (skew-safe two-phase top-k). Checkpointed:
     # the batch feeds the fetch join, the leftover anti-join, the
@@ -441,9 +420,7 @@ def _crawl_round(spark, round_no, frontier, robots, page_index, store,
                                        delay_col=delay_col,
                                        window_ms=window_ms)
                   .select(*FRONTIER_COLS, "host", "rank_in_host"))
-    _lap("batch built")
     n_scheduled = batch.count()
-    _lap("batch.count")
     if n_scheduled == 0:
         return True
     leftover = staged.select(*FRONTIER_COLS) \
@@ -459,36 +436,24 @@ def _crawl_round(spark, round_no, frontier, robots, page_index, store,
     else:
         mode = fetch_mode
     fetched = _ckpt(fetch_pages(page_index, batch, mode))
-    _lap("fetched built")
     results = fetched.where(F.col("text").isNotNull()) \
         .select("url_canon", "text",
                 F.lit(round_no).alias("round"))
 
     # 4. discovery: explode links, canon, min-merge per new url.
-    # The checkpoint BETWEEN the canon projection and the groupBy is
-    # a plan barrier, not (only) a cache: with an Aggregate directly
-    # above the staged canon chain, column pruning keeps url_canon
-    # alone and CollapseProject then inlines every staged step into
-    # ONE combinatorially-duplicated expression — Catalyst spends
-    # 5-25 s PER PLAN re-optimizing that tree (measured: canon over
-    # scan plans in 0.7 s; canon+groupBy in 5.9 s; the full
-    # discovery→gate tree in 27 s, all driver-flat). Behind the
-    # barrier the projection keeps its cheap staged shape and every
-    # downstream plan is O(shallow).
     raw_links = (fetched
                  .where(F.col("links").isNotNull())
                  .select(F.col("priority"), F.col("page_ts"),
                          F.explode("links").alias("link")))
-    canon_links = _ckpt(sched.with_url_canon(raw_links, "link")
-                        .where(F.col("url_canon").isNotNull())
-                        .select("url_canon", "priority", "page_ts"))
+    canon_links = (sched.with_url_canon(raw_links, "link")
+                   .where(F.col("url_canon").isNotNull())
+                   .select("url_canon", "priority", "page_ts"))
     candidates = (canon_links
                   .groupBy("url_canon")
                   .agg(F.min(F.struct(
                       (F.col("priority") + 1).alias("priority"),
                       F.col("page_ts").alias("warc_ts"))).alias("o"))
                   .select("url_canon", "o.priority", "o.warc_ts"))
-    _lap("discovery built")
 
     # 5. seen update + unseen filter. When the previous round
     # estimated the Bloom past target_fpp, REBUILD from the exact
@@ -569,7 +534,6 @@ def _crawl_round(spark, round_no, frontier, robots, page_index, store,
     # disjoint from the committed blocked set by construction (fresh
     # was anti-joined against it above), so no dedup needed
     blocked_delta = blocked_pending.unionByName(newly_blocked)
-    _lap("gate built")
 
     # 6. snapshot commit (also truncates plan lineage). Metrics
     # ride the commit: discovered_new via df.observe on the
@@ -629,9 +593,7 @@ def _crawl_round(spark, round_no, frontier, robots, page_index, store,
         append.add("robots_rules")
         metrics["robots_new_hosts"] = \
             lambda L: L["robots_rules"]["n_rows"]
-    _lap("commit plans built")
     store.commit(tables, metrics, append=append)
-    _lap("commit done")
     return False
 
 

@@ -44,45 +44,14 @@ def _canon_udf():
     return _canon_udf_cache
 
 
-def with_url_canon(df: DataFrame, url_col: str = "url",
-                   impl: str = "auto") -> DataFrame:
-    """Canonicalized URL column. The two implementations are
-    byte-identical (differential-tested, tests/test_urlcanon_jvm.py);
-    the choice is purely physical:
+def with_url_canon(df: DataFrame, url_col: str = "url") -> DataFrame:
+    """``df`` + ``url_canon``: the kernel's ``urlnorm.canonicalize``
+    in an Arrow-batched pandas UDF (NULL where not canonicalizable).
 
-    ``impl="jvm"``: pure Catalyst expression chain
-    (frontier/spark/urlcanon.py) — stays inside whole-stage codegen
-    and scales with EXECUTOR CORES, the right default on a cluster
-    where Python workers share each executor's core budget.
-
-    ``impl="pandas"``: Arrow-batched pandas UDF over the kernel —
-    compile-free plans and, in LOCAL mode, Python workers run as
-    extra processes outside the local[N] thread budget, so it is
-    measurably faster there at every size (round-3 profile: 2.5 s vs
-    5.6 s on 3.1M links at local[32]; ~8 s/round less plan
-    compile at sf0.001). Also the differential oracle.
-
-    ``impl="auto"`` (default): pandas under a ``local[...]`` master,
-    jvm otherwise; override with $FRONTIER_CANON_IMPL.
-    """
-    if impl == "auto":
-        import os
-
-        from pyspark.sql import SparkSession
-
-        impl = os.environ.get("FRONTIER_CANON_IMPL", "")
-        if not impl:
-            master = SparkSession.getActiveSession() \
-                .sparkContext.master
-            impl = "pandas" if master.startswith("local") else "jvm"
-    if impl == "jvm":
-        from frontier.spark import urlcanon
-        # staged projection form: same semantics as canon_expr, but
-        # plan-compile-cheap (see urlcanon.with_canon docstring)
-        return urlcanon.with_canon(df, url_col, "url_canon")
-    if impl == "pandas":
-        return df.withColumn("url_canon", _canon_udf()(F.col(url_col)))
-    raise ValueError(f"unknown url-canon impl: {impl!r}")
+    The plans stay compile-free, and under a ``local[N]`` master the
+    Python workers run as extra processes outside the N-thread
+    budget."""
+    return df.withColumn("url_canon", _canon_udf()(F.col(url_col)))
 
 
 def with_host(df: DataFrame, canon_col: str = "url_canon",

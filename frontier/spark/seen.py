@@ -34,7 +34,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 
 DEFAULT_NUM_BUCKETS = 64
 DEFAULT_BITS_PER_KEY = 10
@@ -258,8 +257,7 @@ def cuckoo_delete(seen_cuckoo: DataFrame, urls: DataFrame,
 def filter_unseen(candidates: DataFrame, seen_bloom: DataFrame,
                   seen_exact: DataFrame | None = None,
                   url_col: str = "url_canon",
-                  num_buckets: int = DEFAULT_NUM_BUCKETS,
-                  impl: str = "auto") -> DataFrame:
+                  num_buckets: int = DEFAULT_NUM_BUCKETS) -> DataFrame:
     """The full anti-join: Bloom pre-filter + exact confirm.
 
     * ``maybe_seen = False`` → definitely new (Bloom has no false
@@ -268,29 +266,11 @@ def filter_unseen(candidates: DataFrame, seen_bloom: DataFrame,
       ``left_anti`` join; survivors are Bloom false positives.
 
     At 10^10 scale the exact join touches only FPP≈1% of candidates —
-    that is the whole point of the partitioned Bloom.
-
-    ``impl`` picks the probe kernel (bit-identical, differential-
-    tested — tests/test_seen.py): ``pandas`` = cogroup numpy kernel
-    (:func:`probe`) — the DEFAULT everywhere: the membership test is
-    exactly the vectorized-batch shape Arrow-batched pandas is for,
-    and it beat the JVM expression probe 4.5× in measurement
-    (probe_jvm's broadcast join materializes each bucket's ~250 KB
-    word array into every joined row). ``jvm`` = whole-stage-codegen
-    bit test (:func:`probe_jvm`) — the Python-free alternative for
-    environments where Python workers are unavailable or rationed.
-    Override with $FRONTIER_PROBE_IMPL.
+    that is the whole point of the partitioned Bloom. The membership
+    test is the cogroup numpy kernel (:func:`probe`): it touches each
+    bucket's filter once per Arrow batch.
     """
-    if impl == "auto":
-        import os
-
-        impl = os.environ.get("FRONTIER_PROBE_IMPL", "") or "pandas"
-    if impl == "jvm":
-        tagged = probe_jvm(candidates, seen_bloom, url_col, num_buckets)
-    elif impl == "pandas":
-        tagged = probe(candidates, seen_bloom, url_col, num_buckets)
-    else:
-        raise ValueError(f"unknown probe impl: {impl!r}")
+    tagged = probe(candidates, seen_bloom, url_col, num_buckets)
     fresh = tagged.where(~F.col("maybe_seen")).drop("maybe_seen", "h1",
                                                     "h2", "bucket")
     if seen_exact is None:
@@ -301,119 +281,3 @@ def filter_unseen(candidates: DataFrame, seen_bloom: DataFrame,
         seen_exact.select(F.col(url_col)).dropDuplicates([url_col]),
         url_col, "left_anti")
     return fresh.unionByName(confirmed_new)
-
-
-def _bloom_words(bloom_col):
-    """binary bloom blob → array<bigint> of LITTLE-ENDIAN 64-bit
-    words (word w holds bytes 8w..8w+7, byte b contributes bits
-    8b..8b+7), so bit i of the FILTER is bit (i % 64) of word
-    (i // 64) — matching the numpy kernel's byte/bit layout
-    (byte = pos >> 3, mask = 1 << (pos & 7)).
-
-    One Arrow-batched numpy pass over the BLOOM relation (one row
-    per bucket — 64..4096 rows, trivially small). A first cut did
-    this as a Catalyst higher-order transform with 8 substring/hex/
-    conv per word: HOF lambdas run INTERPRETED, and 2M-bit buckets
-    took 180 s to expand — the pandas_udf does the same in
-    milliseconds. The expansion sits on the tiny BROADCAST side of
-    the probe join; the 10^10-row candidate side stays whole-stage
-    codegen either way."""
-    @pandas_udf("array<bigint>")
-    def words(blobs: pd.Series) -> pd.Series:
-        out = []
-        for blob in blobs:
-            if blob is None:
-                out.append(None)
-                continue
-            arr = np.frombuffer(blob, dtype=np.uint8)
-            pad = (-len(arr)) % 8
-            if pad:
-                arr = np.concatenate(
-                    [arr, np.zeros(pad, dtype=np.uint8)])
-            # little-endian u64 view; astype int64 keeps the BIT
-            # pattern (two's-complement wrap), which is what getbit
-            # reads
-            out.append(arr.view("<u8").astype(np.int64).tolist())
-        return pd.Series(out)
-
-    return words(bloom_col)
-
-
-def probe_jvm(candidates: DataFrame, seen_bloom: DataFrame,
-              url_col: str = "url_canon",
-              num_buckets: int = DEFAULT_NUM_BUCKETS,
-              k: int = DEFAULT_K) -> DataFrame:
-    """Pure-JVM bloom membership test — same contract as
-    :func:`probe` (differential-tested bit-identical): candidates
-    never leave the JVM, for environments without Python workers.
-    NOT the default: measured 4.5× slower than the Arrow-batched
-    numpy probe at 1M candidates because the BroadcastHashJoin
-    materializes each bucket's ~250 KB word array into every joined
-    candidate row — the vectorized cogroup kernel touches each
-    filter once per BATCH instead. Kept as the documented
-    alternative + second differential witness for the position
-    arithmetic.
-
-    Unsigned-arithmetic note: the numpy kernel computes positions as
-    ``(h1u + i·h2u) mod 2^64`` (uint64 WRAPPING add/multiply) and
-    only then ``mod m_bits`` — reduced-space modular math is NOT
-    equivalent when m does not divide 2^64 (a power-of-two test
-    filter hid exactly that; the default 2,000,000-bit filter
-    exposed it). ANSI mode forbids overflowing long ``+``/``*``, and
-    DECIMAL(38) reproduces the wrap but drags BigDecimal into the
-    hot loop (measured 7× slower than the pandas probe) — so the
-    wrap is done in 32-bit LIMBS with pure bit ops: split each
-    uint64 into (hi, lo) halves via shiftrightunsigned/mask, multiply
-    and add limbs (every intermediate < 2^36), carry with shifts,
-    and reassemble with ``shiftleft | low32`` (bit shifts wrap
-    silently; OR never carries because the low 32 bits of the
-    shifted half are zero). Final unsigned ``mod m`` adds the
-    plan-time constant ``2^64 mod m`` for negative-wrapped values.
-    Bit extraction uses ``getbit`` (column-position bit test over
-    the long's two's-complement bits — exactly the stored layout).
-    """
-    cand = with_hash_cols(candidates, url_col, num_buckets)
-    blooms = seen_bloom.select(
-        "bucket", _bloom_words(F.col("bloom")).alias("_words"),
-        (F.octet_length("bloom") * 8).alias("_m_bits"))
-
-    joined = cand.join(F.broadcast(blooms), "bucket", "left")
-    m = F.col("_m_bits").cast("bigint")
-    low32 = F.lit(0xFFFFFFFF).cast("bigint")
-    two32 = F.lit(1 << 32).cast("bigint")
-    # 2^64 mod m from 2^62 (representable): ((2^62 mod m) * 4) mod m
-    wrap64 = F.pmod(F.pmod(F.lit(1 << 62).cast("bigint"), m) * 4, m)
-
-    def split(x):
-        return F.shiftrightunsigned(x, 32), x.bitwiseAND(low32)
-
-    h1 = F.col("h1")
-    h2p = F.expr("h2 | 1")
-    h1_hi, h1_lo = split(h1)
-    h2_hi, h2_lo = split(h2p)
-    bits = []
-    for i in range(k):
-        # i·h2' mod 2^64 in limbs (i ≤ k-1 ≤ 6 keeps products < 2^36)
-        ilo = F.lit(i) * h2_lo
-        ihi = F.pmod(F.lit(i) * h2_hi
-                     + F.shiftrightunsigned(ilo, 32), two32)
-        # wrapped sum h1 + i·h2' mod 2^64, again limb-wise
-        s_lo = h1_lo + ilo.bitwiseAND(low32)
-        s_hi = F.pmod(h1_hi + ihi
-                      + F.shiftrightunsigned(s_lo, 32), two32)
-        wrapped = F.shiftleft(s_hi, 32) \
-            .bitwiseOR(s_lo.bitwiseAND(low32))
-        # unsigned mod m of the two's-complement-wrapped long
-        pos = F.pmod(F.pmod(wrapped, m)
-                     + F.when(wrapped < 0, wrap64)
-                     .otherwise(F.lit(0)), m)
-        word = F.element_at(F.col("_words"),
-                            F.floor(pos / 64).cast("int") + 1)
-        bits.append(F.getbit(word, F.pmod(pos, 64)) == 1)
-    all_set = bits[0]
-    for b in bits[1:]:
-        all_set = all_set & b
-    maybe = F.when(F.col("_words").isNull(), F.lit(False)) \
-        .otherwise(all_set)
-    return joined.withColumn("maybe_seen", maybe) \
-        .drop("_words", "_m_bits")

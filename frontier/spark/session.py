@@ -43,13 +43,12 @@ def get_spark(app: str = "frontier",
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("FRONTIER_ARROW_BATCH", "1024"))
         .config("spark.ui.enabled", "false")
-        # Constraint propagation is O(expression²) on the staged URL-
-        # canon projection (~30 derived columns): PruneFilters alone
-        # spent 10.6 s per crawl-round plan deriving constraints it
-        # never used (0 effective runs — measured round 4, Catalyst
-        # rule dump). Disabling is the documented Spark remedy for
-        # large iterative plans; it only drops inferred-filter
-        # optimizations, never changes results.
+        # Constraint propagation is O(expression²) on wide derived-
+        # column projections: PruneFilters alone once spent 10.6 s per
+        # crawl-round plan deriving constraints it never used (0
+        # effective runs, Catalyst rule dump). Disabling is the
+        # documented Spark remedy for large iterative plans; it only
+        # drops inferred-filter optimizations, never changes results.
         .config("spark.sql.constraintPropagation.enabled", "false")
         # 128 MiB parquet split targets — at 100 TB this yields ~800k
         # input tasks, the right granularity for 1000 executors

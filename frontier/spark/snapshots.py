@@ -97,17 +97,12 @@ class SnapshotStore:
         parent_man = self.manifest(parent) if parent is not None else None
         lineage: dict[str, Any] = {}
         table_paths: dict[str, Any] = {}
-        debug_timing = bool(os.environ.get("FRONTIER_DEBUG_TIMING"))
 
         def write_one(item):
             name, df = item
             path = os.path.join(self.root, "data",
                                 f"snap-{snap_id}", name)
-            t0 = time.perf_counter()
             df.write.mode("overwrite").parquet(path)
-            if debug_timing:
-                print(f"[snapshot] write {name}: "
-                      f"{time.perf_counter() - t0:.2f}s", flush=True)
             files = sorted(
                 f for f in os.listdir(path) if f.endswith(".parquet"))
             # per-partition lineage: one (file, n_rows) pair per task

@@ -1,50 +1,30 @@
-"""JVM-side URL canonicalization — a pure Catalyst expression chain.
+"""JVM-side URL host extraction — a pure Catalyst expression chain.
 
-Same spec as frontier/kernel/urlnorm.py (see that module's docstring
-for the rules). Motivation: round-2 profiling showed the crawl loop's
-only width-flat stage was the pandas ``canonicalize`` UDF — Python
-workers saturate and do not benefit from more JVM cores. This module
-re-expresses the whole canonicalization as built-in string/array
-functions, so link discovery stays inside whole-stage codegen and
-scales with executor cores. The pandas kernel remains as the
-differential oracle (tests/test_urlcanon_jvm.py proves jvm == python
-on generated + adversarial URLs).
+:func:`host_expr` derives the lowercased host of a raw URL with
+built-in string functions, so the robots prune can compute its host
+set inside whole-stage codegen without a Python pass. It follows the
+host rules of frontier/kernel/urlnorm.py (``host_of``);
+tests/test_urlcanon.py checks it against the kernel on an
+adversarial and a generated URL corpus. URL canonicalization itself
+runs the kernel in an Arrow-batched pandas UDF
+(``schedule.with_url_canon``).
 
-Performance shape (round-3 profile, 3.1M links, local[32]): the first
-cut of this chain ran the master regex FIVE times per row (one rlike
-+ four regexp_extract) and unconditionally built per-row arrays for
-the path fold and query sort — 2-4x slower than the pandas kernel it
-replaced. This version:
-
-* runs the regex ONCE (validity only). Components come from plain
-  substring arithmetic, which is exact BECAUSE the row matched: the
-  regex grammar ``[scheme:]//netloc[path][?query][#frag]`` puts the
-  first ``#`` at the fragment, the first ``?`` before it at the
-  query, and the netloc/path split at the first ``/`` after ``//`` —
-  so ``substring_index``/``substring`` reproduce the capture groups;
-* ``btrim`` for ASCII-whitespace strip instead of a regexp_replace;
-* ``length == octet_length`` for the host ASCII gate (UTF-8 encodes
-  exactly the code points < 128 in one byte) instead of a regex;
-* the dot-segment fold runs only when the path contains ``/.``
-  (paths always start with ``/`` or are empty, so every ``.``/``..``
-  segment implies that substring); otherwise the fold is the
-  identity by construction;
-* the query-pair sort runs only when the query contains ``&``; the
-  single-chunk form is rendered directly.
-
-Remaining building blocks and why they are exact:
+Why the chain is exact:
 
 * the validity regex is the SAME pattern string as the kernel's
   (urlnorm.URL_REGEX) — it uses only constructs with identical
-  semantics in Python ``re`` and ``java.util.regex``;
-* UTF-8 binary string comparison (Spark) equals code-point comparison
-  (Python sort) because UTF-8 byte order preserves code-point order;
-* ``lower()`` agrees because the host is gated to ASCII first;
-* dot-segment resolution is a left fold — ``F.aggregate`` over the
-  split path with an array accumulator;
-* stable sort of query pairs rides ``array_sort`` over
-  ``struct(key, index, rendered)`` — struct comparison is
-  lexicographic by field, so the index field IS the stability.
+  semantics in Python ``re`` and ``java.util.regex``; it runs once
+  per row, for validity only;
+* components come from plain substring arithmetic, which is exact
+  BECAUSE the row matched: the regex grammar
+  ``[scheme:]//netloc[path][?query][#frag]`` puts the first ``#`` at
+  the fragment, the first ``?`` before it at the query, and the
+  netloc/path split at the first ``/`` after ``//`` — so
+  ``substring_index``/``substring`` reproduce the capture groups;
+* ``btrim`` strips the kernel's ASCII whitespace set;
+* ``length == octet_length`` is the host ASCII gate (UTF-8 encodes
+  exactly the code points < 128 in one byte), and ``lower()`` agrees
+  with Python's because the host is ASCII.
 """
 
 from __future__ import annotations
@@ -57,285 +37,41 @@ from frontier.kernel.urlnorm import URL_REGEX
 _TRIM = " \t\r\n\x0b\f"
 
 
-def _components(u: Column) -> tuple[Column, Column, Column, Column]:
-    """(scheme, netloc, path, query) of a whitespace-trimmed URL.
+def _netloc(u: Column) -> Column:
+    """netloc of a whitespace-trimmed URL.
 
     Valid ONLY for rows where ``u`` matches URL_REGEX (callers mask
     invalid rows); on such rows these substring operations reproduce
-    the regex capture groups exactly (see module docstring).
+    the regex capture group exactly (see module docstring).
     """
     maxlen = F.lit(2147483647)
     uf = F.substring_index(u, "#", 1)          # strip fragment
     upq = F.substring_index(uf, "?", 1)        # before query
-    query = F.when(F.length(uf) > F.length(upq),
-                   F.substring(uf, F.length(upq) + 2, maxlen)) \
-        .otherwise(F.lit(""))
     no_scheme = upq.startswith("//")
-    scheme = F.when(no_scheme, F.lit("")) \
-        .otherwise(F.lower(F.substring_index(upq, ":", 1)))
+    scheme = F.lower(F.substring_index(upq, ":", 1))
     rest = F.when(no_scheme, F.substring(upq, 3, maxlen)) \
         .otherwise(F.substring(upq, F.length(scheme) + 4, maxlen))
-    netloc = F.substring_index(rest, "/", 1)
-    path = F.substring(rest, F.length(netloc) + 1, maxlen)
-    return scheme, netloc, path, query
+    return F.substring_index(rest, "/", 1)
 
 
-def _host_port(netloc: Column) -> tuple[Column, Column]:
-    """(raw host, port string) — kernel _split_hostport. Userinfo
-    (before the LAST ``@``) dropped; bracketed IPv6 keeps ``:`` inside
-    brackets (rare → regex only on that branch); else port is
-    everything after the first ``:``."""
-    maxlen = F.lit(2147483647)
+def _host(netloc: Column) -> Column:
+    """raw host — kernel _split_hostport. Userinfo (before the LAST
+    ``@``) dropped; a bracketed IPv6 host is the text inside the
+    brackets (rare → regex only on that branch); else the host is
+    everything before the first ``:``."""
     hostinfo = F.when(netloc.contains("@"),
                       F.element_at(F.split(netloc, "@", -1), -1)) \
         .otherwise(netloc)
-    bracketed = hostinfo.startswith("[")
-    nb_host = F.substring_index(hostinfo, ":", 1)
-    host_raw = F.when(
-        bracketed, F.regexp_extract(hostinfo, r"^\[([^\]]*)", 1)
-    ).otherwise(nb_host)
-    port_s = F.when(
-        bracketed,
-        F.regexp_extract(
-            F.regexp_extract(hostinfo, r"^\[[^\]]*\]([\s\S]*)$", 1),
-            r"^[^:]*:([\s\S]*)$", 1),
-    ).when(hostinfo.contains(":"),
-           F.substring(hostinfo, F.length(nb_host) + 2, maxlen)) \
-        .otherwise(F.lit(""))
-    return host_raw, port_s
+    return F.when(
+        hostinfo.startswith("["),
+        F.regexp_extract(hostinfo, r"^\[([^\]]*)", 1),
+    ).otherwise(F.substring_index(hostinfo, ":", 1))
 
 
 def _is_ascii(s: Column) -> Column:
     # UTF-8 uses one byte exactly for code points < 128, so
     # char-length == byte-length ⟺ str.isascii()
     return F.length(s) == F.octet_length(s)
-
-
-def canon_expr(url: Column) -> Column:
-    """Column of canonicalized URLs (NULL where not canonicalizable)."""
-    u = F.btrim(url, F.lit(_TRIM))
-    matched = u.rlike(URL_REGEX)
-    scheme, netloc, path_raw, query_raw = _components(u)
-    host_raw, port_s = _host_port(netloc)
-
-    host_ok = (host_raw != "") & _is_ascii(host_raw)
-    host = F.lower(host_raw)
-
-    # Kernel semantics (urlnorm.py): ANY all-digit port string is
-    # numeric, leading zeros dropped, value must be ≤ 65535. Strip
-    # leading zeros FIRST so '0000000080' (10+ digits) stays valid —
-    # after the strip a valid port has ≤5 digits, so the int cast can
-    # never overflow under ANSI mode. All-zeros strips to '' = port 0.
-    port_z = F.regexp_replace(port_s, r"^0+", "")
-    port_numeric = port_s.rlike(r"^[0-9]+$") & (F.length(port_z) <= 5)
-    port_i = F.when(
-        port_numeric,
-        F.when(port_z == "", F.lit(0)).otherwise(port_z.cast("int")))
-    port_ok = F.when(port_s == "", F.lit(True)) \
-        .otherwise(port_numeric & (port_i <= 65535))
-
-    default_port = (F.when(scheme == "http", 80)
-                    .when(scheme == "https", 443))
-    hostfmt = F.when(host.contains(":"),
-                     F.concat(F.lit("["), host, F.lit("]"))) \
-        .otherwise(host)
-    netloc_out = F.when(
-        (port_s == "") | (port_i == F.coalesce(default_port, F.lit(-1))),
-        hostfmt,
-    ).otherwise(F.concat(hostfmt, F.lit(":"), port_i.cast("string")))
-
-    # --- path: left fold over '/'-split segments (kernel
-    # _normalize_path) — but only when a '.'/'..' segment can exist
-    # (path starts with '/' or is empty ⇒ any such segment implies
-    # the substring "/."). The nested whens are lazily evaluated, so
-    # element_at(acc, -1) only runs when the accumulator is non-empty.
-    def _fold(acc, seg):
-        last_empty = F.element_at(acc, -1) == ""
-        popped = F.slice(acc, F.lit(1), F.size(acc) - 1)
-        return (F.when(seg == ".", acc)
-                .when(seg == "..",
-                      F.when(F.size(acc) == 0, acc)
-                      .when(last_empty, acc)
-                      .otherwise(popped))
-                .otherwise(F.concat(acc, F.array(seg))))
-
-    norm = F.when(
-        path_raw.contains("/."),
-        F.array_join(F.aggregate(
-            F.split(path_raw, "/", -1),
-            F.expr("CAST(array() AS array<string>)"), _fold), "/"),
-    ).otherwise(path_raw)
-    path_out = F.when(norm.startswith("/"), norm) \
-        .otherwise(F.concat(F.lit("/"), norm))
-
-    # --- query: stable sort by key via struct(key, index, rendered);
-    # the array machinery only runs on multi-chunk queries.
-    def _sorted_query(qr: Column) -> Column:
-        chunks = F.filter(F.split(qr, "&", -1),
-                          lambda c: c != F.lit(""))
-        pairs = F.transform(
-            chunks,
-            lambda c, i: F.struct(
-                F.substring_index(c, "=", 1).alias("k"),
-                i.alias("i"),
-                F.when(c.contains("="), c)
-                .otherwise(F.concat(c, F.lit("="))).alias("kv")))
-        return F.array_join(
-            F.transform(F.array_sort(pairs),
-                        lambda s: s.getField("kv")), "&")
-
-    q_out = F.when(query_raw == "", F.lit("")) \
-        .when(~query_raw.contains("&"),
-              F.when(query_raw.contains("="), query_raw)
-              .otherwise(F.concat(query_raw, F.lit("=")))) \
-        .otherwise(_sorted_query(query_raw))
-
-    base = F.concat(
-        F.when(scheme != "", F.concat(scheme, F.lit(":")))
-        .otherwise(F.lit("")),
-        F.lit("//"), netloc_out, path_out)
-    result = F.when(q_out != "", F.concat(base, F.lit("?"), q_out)) \
-        .otherwise(base)
-
-    valid = (F.coalesce(matched, F.lit(False))
-             & host_ok & F.coalesce(port_ok, F.lit(False)))
-    return F.when(valid, result)
-
-
-def with_canon(df, url_col: str = "url",
-               out_col: str = "url_canon"):
-    """``df`` + canonicalized URL column — the PLAN-CHEAP form.
-
-    Semantically identical to ``withColumn(out, canon_expr(url))``
-    (tests/test_urlcanon_jvm.py proves it), but each shared
-    subexpression is bound ONCE as a temporary projection column
-    instead of being re-nested at every use site. The single-Column
-    form duplicates every level of the chain 2-3× per reference, so
-    its Catalyst tree grows combinatorially — ~2 s of driver-side
-    analysis + Janino codegen for EVERY new plan that embeds it
-    (measured on a 1-row input). The optimizer keeps these named
-    steps because CollapseProject refuses to inline an expression it
-    would have to duplicate; runtime row work is the same, and the
-    crawl loop's per-round plan compile drops from seconds to
-    tens of milliseconds.
-
-    Temp columns are ``_uc_``-prefixed and dropped before returning.
-    """
-    P = "_uc_"
-    maxlen = F.lit(2147483647)
-    steps: list[tuple[str, Column]] = []
-
-    def let(name: str, col: Column) -> Column:
-        steps.append((P + name, col))
-        return F.col(P + name)
-
-    u = let("u", F.btrim(F.col(url_col), F.lit(_TRIM)))
-    matched = let("match", u.rlike(URL_REGEX))
-    uf = let("uf", F.substring_index(u, "#", 1))
-    upq = let("upq", F.substring_index(uf, "?", 1))
-    query_raw = let("q", F.when(
-        F.length(uf) > F.length(upq),
-        F.substring(uf, F.length(upq) + 2, maxlen)).otherwise(F.lit("")))
-    no_scheme = let("nosch", upq.startswith("//"))
-    scheme = let("sch", F.when(no_scheme, F.lit(""))
-                 .otherwise(F.lower(F.substring_index(upq, ":", 1))))
-    rest = let("rest", F.when(no_scheme, F.substring(upq, 3, maxlen))
-               .otherwise(F.substring(upq, F.length(scheme) + 4, maxlen)))
-    netloc = let("netloc", F.substring_index(rest, "/", 1))
-    path_raw = let("path", F.substring(rest, F.length(netloc) + 1, maxlen))
-
-    hostinfo = let("hostinfo", F.when(
-        netloc.contains("@"),
-        F.element_at(F.split(netloc, "@", -1), -1)).otherwise(netloc))
-    bracketed = let("br", hostinfo.startswith("["))
-    nb_host = let("nbhost", F.substring_index(hostinfo, ":", 1))
-    host_raw = let("hostraw", F.when(
-        bracketed, F.regexp_extract(hostinfo, r"^\[([^\]]*)", 1))
-        .otherwise(nb_host))
-    port_s = let("ports", F.when(
-        bracketed,
-        F.regexp_extract(
-            F.regexp_extract(hostinfo, r"^\[[^\]]*\]([\s\S]*)$", 1),
-            r"^[^:]*:([\s\S]*)$", 1))
-        .when(hostinfo.contains(":"),
-              F.substring(hostinfo, F.length(nb_host) + 2, maxlen))
-        .otherwise(F.lit("")))
-
-    host_ok = let("hostok",
-                  (host_raw != "") & _is_ascii(host_raw))
-    host = let("host", F.lower(host_raw))
-    # leading-zero strip first (kernel parity — see canon_expr)
-    port_z = let("portz", F.regexp_replace(port_s, r"^0+", ""))
-    port_numeric = let("portnum",
-                       port_s.rlike(r"^[0-9]+$") & (F.length(port_z) <= 5))
-    port_i = let("porti", F.when(
-        port_numeric,
-        F.when(port_z == "", F.lit(0)).otherwise(port_z.cast("int"))))
-    port_ok = let("portok", F.when(port_s == "", F.lit(True))
-                  .otherwise(port_numeric & (port_i <= 65535)))
-
-    default_port = (F.when(scheme == "http", 80)
-                    .when(scheme == "https", 443))
-    hostfmt = let("hostfmt", F.when(
-        host.contains(":"), F.concat(F.lit("["), host, F.lit("]")))
-        .otherwise(host))
-    netloc_out = let("netout", F.when(
-        (port_s == "") | (port_i == F.coalesce(default_port, F.lit(-1))),
-        hostfmt).otherwise(
-        F.concat(hostfmt, F.lit(":"), port_i.cast("string"))))
-
-    def _fold(acc, seg):
-        last_empty = F.element_at(acc, -1) == ""
-        popped = F.slice(acc, F.lit(1), F.size(acc) - 1)
-        return (F.when(seg == ".", acc)
-                .when(seg == "..",
-                      F.when(F.size(acc) == 0, acc)
-                      .when(last_empty, acc)
-                      .otherwise(popped))
-                .otherwise(F.concat(acc, F.array(seg))))
-
-    norm = let("norm", F.when(
-        path_raw.contains("/."),
-        F.array_join(F.aggregate(
-            F.split(path_raw, "/", -1),
-            F.expr("CAST(array() AS array<string>)"), _fold), "/"))
-        .otherwise(path_raw))
-    path_out = let("pathout", F.when(norm.startswith("/"), norm)
-                   .otherwise(F.concat(F.lit("/"), norm)))
-
-    def _sorted_query(qr: Column) -> Column:
-        chunks = F.filter(F.split(qr, "&", -1),
-                          lambda c: c != F.lit(""))
-        pairs = F.transform(
-            chunks,
-            lambda c, i: F.struct(
-                F.substring_index(c, "=", 1).alias("k"),
-                i.alias("i"),
-                F.when(c.contains("="), c)
-                .otherwise(F.concat(c, F.lit("="))).alias("kv")))
-        return F.array_join(
-            F.transform(F.array_sort(pairs),
-                        lambda s: s.getField("kv")), "&")
-
-    q_out = let("qout", F.when(query_raw == "", F.lit(""))
-                .when(~query_raw.contains("&"),
-                      F.when(query_raw.contains("="), query_raw)
-                      .otherwise(F.concat(query_raw, F.lit("="))))
-                .otherwise(_sorted_query(query_raw)))
-
-    base = F.concat(
-        F.when(scheme != "", F.concat(scheme, F.lit(":")))
-        .otherwise(F.lit("")),
-        F.lit("//"), netloc_out, path_out)
-    result = F.when(q_out != "", F.concat(base, F.lit("?"), q_out)) \
-        .otherwise(base)
-    valid = (F.coalesce(matched, F.lit(False))
-             & host_ok & F.coalesce(port_ok, F.lit(False)))
-
-    for name, col in steps:
-        df = df.withColumn(name, col)
-    return df.withColumn(out_col, F.when(valid, result)) \
-        .drop(*[name for name, _ in steps])
 
 
 def host_expr(url: Column, validate: bool = True) -> Column:
@@ -351,8 +87,7 @@ def host_expr(url: Column, validate: bool = True) -> Column:
     over 500k urls), and nothing else should use it.
     """
     u = F.btrim(url, F.lit(_TRIM))
-    _, netloc, _, _ = _components(u)
-    host_raw, _ = _host_port(netloc)
+    host_raw = _host(_netloc(u))
     if not validate:
         return F.lower(host_raw)
     matched = u.rlike(URL_REGEX)

@@ -31,11 +31,6 @@ def main():
     ap.add_argument("--num-buckets", type=int, default=64)
     ap.add_argument("--fetch-mode", default="auto",
                     choices=["auto", "broadcast", "copartition"])
-    ap.add_argument("--canon-impl", default="auto",
-                    choices=["auto", "jvm", "pandas"],
-                    help="URL-canon implementation (auto: pandas under"
-                         " a local master, jvm on clusters; both"
-                         " byte-identical)")
     ap.add_argument("--target-fpp", type=float, default=0.02,
                     help="bloom saturation guard threshold")
     ap.add_argument("--acquire-robots", action="store_true",
@@ -94,8 +89,6 @@ def main():
     from frontier.spark.session import get_spark
     from frontier.spark.snapshots import SnapshotStore
 
-    if args.canon_impl != "auto":
-        os.environ["FRONTIER_CANON_IMPL"] = args.canon_impl
     spark = get_spark(app="frontier-crawl", cores=args.cpus)
     t0 = time.perf_counter()
 

@@ -72,77 +72,47 @@ def test_bloom_deterministic_across_parallelism(spark, urls):
     assert joined.count() == 0
 
 
-def test_probe_jvm_matches_pandas_probe(spark):
-    """The pure-JVM bloom probe must be bit-identical to the pandas
-    kernel probe on the same filter relation — including bucket
-    misses, false-positive territory (tiny filter), and unsigned
-    position arithmetic on negative-wrapped h1/h2."""
-    from frontier.spark import seen as seenmod
-
-    urls = spark.createDataFrame(
+def test_no_false_negatives_non_power_of_two_filter(spark):
+    """A tiny NON-power-of-two filter (10,000 bits: m does not divide
+    2^64, so the uint64 position wrap matters) that also forces false
+    positives must still read maybe_seen for every inserted url."""
+    inserted = spark.createDataFrame(
         [(f"https://h{i % 17}.example/p{i}",) for i in range(500)],
         "url_canon string")
-    # tiny NON-power-of-two filter (m must not divide 2^64 — the
-    # uint64 position wrap is invisible otherwise) + forces FPs
-    bloom = seenmod.build(urls, num_buckets=8, bits_per_bucket=10000)
+    bloom = seen.build(inserted, num_buckets=BUCKETS,
+                       bits_per_bucket=10000)
     cands = spark.createDataFrame(
         [(f"https://h{i % 17}.example/p{i}",) for i in range(0, 1500)],
         "url_canon string")
-    a = {(r.url_canon, r.maybe_seen) for r in
-         seenmod.probe(cands, bloom, num_buckets=8).collect()}
-    b = {(r.url_canon, r.maybe_seen) for r in
-         seenmod.probe_jvm(cands, bloom, num_buckets=8).collect()}
-    assert a == b
-    # all inserted urls must read maybe_seen (no false negatives)
-    seen_true = {u for u, m in b if m}
-    inserted = {r.url_canon for r in urls.collect()}
-    assert inserted <= seen_true
+    maybe = {r.url_canon for r in
+             seen.probe(cands, bloom, num_buckets=BUCKETS)
+             .where(F.col("maybe_seen")).collect()}
+    assert {r.url_canon for r in inserted.collect()} <= maybe
 
 
-def test_probe_jvm_empty_bloom(spark):
-    from frontier.spark import seen as seenmod
-
-    bloom = spark.createDataFrame([], seenmod.BLOOM_DDL)
+def test_probe_empty_bloom(spark):
+    bloom = spark.createDataFrame([], seen.BLOOM_DDL)
     cands = spark.createDataFrame([("https://x/1",)],
                                   "url_canon string")
-    rows = seenmod.probe_jvm(cands, bloom, num_buckets=8).collect()
+    rows = seen.probe(cands, bloom, num_buckets=BUCKETS).collect()
     assert rows[0].maybe_seen is False
 
 
-def test_probe_jvm_plan_is_python_free_on_candidates(spark):
-    """The CANDIDATE hot path must be whole-stage codegen — Python
-    appears only on the tiny broadcast (bloom) side: word expansion
-    is an Arrow pass over one row per bucket."""
-    from frontier.spark import seen as seenmod
-
-    urls = spark.createDataFrame([("https://a/1",)], "url_canon string")
-    bloom = seenmod.build(urls, num_buckets=8, bits_per_bucket=4096)
-    cands = spark.createDataFrame([("https://a/2",)],
-                                  "url_canon string")
-    out = seenmod.probe_jvm(cands, bloom, num_buckets=8)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    # everything above the BroadcastExchange is the stream
-    # (candidate) side — it must carry no Python eval
-    stream_side = plan.split("BroadcastExchange")[0]
-    assert "ArrowEvalPython" not in stream_side
-    assert "FlatMapCoGroupsInPandas" not in plan  # that's probe()'s shape
-
-
-def test_filter_unseen_impls_identical(spark):
-    from frontier.spark import seen as seenmod
-
-    urls = spark.createDataFrame(
+def test_filter_unseen_exact_confirm_rescues_false_positives(spark):
+    inserted = spark.createDataFrame(
         [(f"https://h{i % 5}.example/s{i}",) for i in range(200)],
         "url_canon string")
-    bloom = seenmod.build(urls, num_buckets=8, bits_per_bucket=4096)
+    # 64 bits per bucket for ~25 keys: most unseen urls read maybe_seen
+    bloom = seen.build(inserted, num_buckets=BUCKETS, bits_per_bucket=64)
     cands = spark.createDataFrame(
         [(f"https://h{i % 5}.example/s{i}",) for i in range(0, 600)],
         "url_canon string")
-    a = {r.url_canon for r in seenmod.filter_unseen(
-        cands, bloom, urls, num_buckets=8, impl="pandas").collect()}
-    b = {r.url_canon for r in seenmod.filter_unseen(
-        cands, bloom, urls, num_buckets=8, impl="jvm").collect()}
-    assert a == b
-    # exact confirm kills every false positive: unseen = 200..599
-    assert a == {f"https://h{i % 5}.example/s{i}" for i in range(200, 600)}
+    unseen = {f"https://h{i % 5}.example/s{i}" for i in range(200, 600)}
+    maybe = {r.url_canon for r in
+             seen.probe(cands, bloom, num_buckets=BUCKETS)
+             .where(F.col("maybe_seen")).collect()}
+    assert maybe & unseen, "filter too sparse to produce false positives"
+    out = [r.url_canon for r in seen.filter_unseen(
+        cands, bloom, inserted, num_buckets=BUCKETS).collect()]
+    # exact confirm rescues every false positive: unseen = 200..599
+    assert sorted(out) == sorted(unseen)

@@ -1,14 +1,14 @@
-"""Differential test: JVM Catalyst url-canon == Python kernel.
+"""URL canonicalization through the real operator == Python kernel.
 
-The JVM chain (frontier/spark/urlcanon.py) is the crawl loop's default;
-the pandas kernel (frontier/kernel/urlnorm.py) is the oracle. Both are
-driven over the SAME adversarial + hypothesis-generated URL corpus and
-must agree exactly (including on which URLs are un-canonicalizable).
+``schedule.with_url_canon`` (the Arrow-batched kernel UDF) and
+``urlcanon.host_expr`` (the Catalyst host chain the robots prune uses)
+are driven over the SAME adversarial + hypothesis-generated URL
+corpus and must agree exactly with frontier/kernel/urlnorm.py
+(including on which URLs are un-canonicalizable).
 """
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import given, settings, strategies as st
 
 from frontier.kernel import urlnorm
@@ -71,23 +71,24 @@ def urls(draw):
     return pad + body + host + port + path + query + frag + pad
 
 
-def _run_jvm(spark, batch):
-    from frontier.spark import urlcanon
+def _run_spark(spark, batch):
+    from frontier.spark import schedule, urlcanon
     from pyspark.sql import functions as F
     df = spark.createDataFrame(
         [(i, u) for i, u in enumerate(batch)], "i int, url string")
-    rows = (df.select("i", urlcanon.canon_expr(F.col("url")).alias("c"),
-                      urlcanon.host_expr(F.col("url")).alias("h"))
+    rows = (schedule.with_url_canon(df)
+            .withColumn("h", urlcanon.host_expr(F.col("url")))
+            .select("i", "url_canon", "h")
             .collect())
-    by_i = {r["i"]: (r["c"], r["h"]) for r in rows}
+    by_i = {r["i"]: (r["url_canon"], r["h"]) for r in rows}
     return [by_i[i] for i in range(len(batch))]
 
 
 def test_adversarial_corpus_matches_kernel(spark):
-    got = _run_jvm(spark, ADVERSARIAL)
-    for url, (jvm_c, jvm_h) in zip(ADVERSARIAL, got):
-        assert jvm_c == urlnorm.canonicalize(url), repr(url)
-        assert jvm_h == urlnorm.host_of(url), repr(url)
+    got = _run_spark(spark, ADVERSARIAL)
+    for url, (canon, host) in zip(ADVERSARIAL, got):
+        assert canon == urlnorm.canonicalize(url), repr(url)
+        assert host == urlnorm.host_of(url), repr(url)
 
 
 def test_hypothesis_urls_match_kernel(spark):
@@ -101,75 +102,23 @@ def test_hypothesis_urls_match_kernel(spark):
         corpus.append(u)
 
     _collect()
-    got = _run_jvm(spark, corpus)
-    for url, (jvm_c, jvm_h) in zip(corpus, got):
-        assert jvm_c == urlnorm.canonicalize(url), repr(url)
-        assert jvm_h == urlnorm.host_of(url), repr(url)
+    got = _run_spark(spark, corpus)
+    for url, (canon, host) in zip(corpus, got):
+        assert canon == urlnorm.canonicalize(url), repr(url)
+        assert host == urlnorm.host_of(url), repr(url)
 
 
-def test_idempotent_through_jvm(spark):
+def test_idempotent_through_operator(spark):
     once = [urlnorm.canonicalize(u) for u in ADVERSARIAL]
     once = [c for c in once if c is not None]
-    got = _run_jvm(spark, once)
-    for c, (jvm_c, _) in zip(once, got):
-        assert jvm_c == c
-
-
-def test_canon_impl_contract(spark, monkeypatch):
-    """impl='jvm' must contain no Python eval node (the cluster
-    default); impl='auto' resolves to the pandas kernel under a
-    local master and honors $FRONTIER_CANON_IMPL; both agree."""
-    from frontier.spark import schedule
-    df = spark.createDataFrame([("http://A.b:80/x?b=1&a=2",)], "url string")
-    plan = schedule.with_url_canon(df, impl="jvm") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    for impl in ("jvm", "pandas", "auto"):
-        row = schedule.with_url_canon(df, impl=impl).collect()[0]
-        assert row["url_canon"] == "http://a.b/x?a=2&b=1", impl
-    # auto under local[..] -> pandas (Python eval node present)
-    monkeypatch.delenv("FRONTIER_CANON_IMPL", raising=False)
-    auto_plan = schedule.with_url_canon(df) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" in auto_plan
-    # env override pins the impl
-    monkeypatch.setenv("FRONTIER_CANON_IMPL", "jvm")
-    forced = schedule.with_url_canon(df) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in forced
-
-
-def test_pandas_impl_still_available(spark):
-    from frontier.spark import schedule
-    df = spark.createDataFrame([("HTTP://H/p?b=1&a=2#f",)], "url string")
-    row = schedule.with_url_canon(df, impl="pandas").collect()[0]
-    assert row["url_canon"] == "http://h/p?a=2&b=1"
-    with pytest.raises(ValueError):
-        schedule.with_url_canon(df, impl="bogus")
-
-
-def test_staged_with_canon_equals_column_form(spark):
-    """urlcanon.with_canon (plan-cheap staged projections, the
-    scheduler default) must agree exactly with canon_expr AND the
-    Python kernel on the adversarial corpus."""
-    from pyspark.sql import functions as F
-
-    from frontier.spark import urlcanon
-
-    df = spark.createDataFrame(
-        [(i, u) for i, u in enumerate(ADVERSARIAL)], "i long, url string")
-    both = urlcanon.with_canon(df, "url", "staged") \
-        .withColumn("expr_form", urlcanon.canon_expr(F.col("url")))
-    rows = both.orderBy("i").collect()
-    assert list(both.columns) == ["i", "url", "staged", "expr_form"]
-    for r in rows:
-        assert r.staged == r.expr_form, repr(r.url)
-        assert r.staged == urlnorm.canonicalize(r.url), repr(r.url)
+    got = _run_spark(spark, once)
+    for c, (canon, _) in zip(once, got):
+        assert canon == c
 
 
 def test_host_expr_covers_staged_gate_keys(spark):
-    """Prune-safety (r5): the robots prune may derive its host set
-    from the RAW url via host_expr instead of the staged canon chain
+    """Prune-safety: the robots prune may derive its host set from
+    the RAW url via host_expr instead of the staged canon column
     (apply_robots prune_hosts=...). That is sound iff every gate key
     the staged frontier can produce — with_host(canon).host — is
     either host_expr(url) itself, or a value no real robots key ever
@@ -184,7 +133,7 @@ def test_host_expr_covers_staged_gate_keys(spark):
     df = spark.createDataFrame(
         [(i, u) for i, u in enumerate(ADVERSARIAL)], "i long, url string")
     staged = schedule.with_host(
-        schedule.with_url_canon(df, impl="jvm")
+        schedule.with_url_canon(df)
         .where(F.col("url_canon").isNotNull()))
     rows = (staged
             .withColumn("cheap", urlcanon.host_expr(F.col("url")))

@@ -71,8 +71,9 @@ def _pair_cos(va_col, vb_col):
                      * IVF_QUANT)
         b = np.floor(np.asarray(vb.tolist(), dtype=np.float64)
                      * IVF_QUANT)
-        if a.size == 0:
+        if len(va) == 0:
             return pd.Series([], dtype=np.float64)
+        # zero-dim rows: every einsum is 0, so 0/0 scores NaN
         dots = np.einsum("ij,ij->i", a, b)
         with np.errstate(divide="ignore", invalid="ignore"):
             out = dots / (np.sqrt(np.einsum("ij,ij->i", a, a))
@@ -102,8 +103,10 @@ def _pair_cos_raw(va_col, vb_col):
     def pair_cos_raw(va: pd.Series, vb: pd.Series) -> pd.Series:
         a = np.asarray(va.tolist(), dtype=np.float64)
         b = np.asarray(vb.tolist(), dtype=np.float64)
-        if a.size == 0:
+        if len(va) == 0:
             return pd.Series([], dtype=np.float64)
+        if a.shape[1] == 0:  # zero-dim rows: no direction, 0/0
+            return pd.Series(np.full(len(va), np.nan))
         dots = np.add.accumulate(a * b, axis=1)[:, -1]
         na = np.sqrt(np.add.accumulate(a * a, axis=1)[:, -1])
         nb = np.sqrt(np.add.accumulate(b * b, axis=1)[:, -1])
@@ -301,23 +304,18 @@ def _codebook_rows(embeddings: DataFrame, n_cells: int = 16,
     # the training makes n_iter+1 passes over xq (seed rank + one
     # fused assign/partial-sum pass per Lloyd iteration) — lazily
     # checkpoint it so the source is scanned + quantized ONCE, and
-    # release the blocks before returning (checkpoint_rdd handle:
-    # localCheckpoint blocks bypass CacheManager, the r5 rule). At
+    # release the blocks before returning (session.release: the
+    # blocks bypass CacheManager, the r5 rule). At
     # 10⁹ vectors MEMORY_AND_DISK spills rather than re-reading
     # parquet per pass; either is correct, this is the faster
     # default.
-    handle = None
+    live: list = []
     if n_iter >= 1:
-        xq = xq.localCheckpoint(eager=False)
-        handle = session.checkpoint_rdd(xq)
+        xq = session.checkpoint(xq, live)
     try:
         return _lloyd_loop(xq, n_cells, n_iter)
     finally:
-        if handle is not None:
-            try:
-                handle.unpersist(False)
-            except Exception:
-                pass  # session teardown race
+        session.release(live)
 
 
 def _lloyd_loop(xq: DataFrame, n_cells: int, n_iter: int

@@ -40,10 +40,11 @@ cost ~6 recomputations of the round lineage per round.
 
 Scale notes: every per-round shuffle keys on url_canon or host; the
 budget-bounded batch is broadcast onto the page index so page bytes
-never shuffle (switch to the bucketed co-partitioned join for 10^8+
-batches — see fetch_mode). Results append, never rewrite; seen_exact
-and blocked are APPEND tables (round 4 — only the round's delta is
-written, the one shape a 10^10-URL seen set admits). The frontier
+never shuffle (batches past ``broadcast_fetch_max`` rows take the
+co-partitioned join instead — see fetch_pages). Results append,
+never rewrite; seen_exact and blocked are APPEND tables (round 4 —
+only the round's delta is written, the one shape a 10^10-URL seen
+set admits). The frontier
 stays a whole-rewrite table ON PURPOSE: the politeness cut must read
 and re-rank the FULL frontier every round regardless (global top-k
 per host), so the O(frontier) scan is inherent to scheduling; a
@@ -127,8 +128,9 @@ def fetch_pages(page_index: DataFrame, batch: DataFrame,
       shuffle_hash beats shuffle_merge here because merge would sort
       the wide page rows per bucket.
 
-    Both produce identical rows (test_crawl proves it) — the switch
-    is purely physical.
+    Both produce identical rows (test_crawl proves it) — the choice
+    is purely physical; the crawl round makes it from the batch size
+    (``crawl(broadcast_fetch_max=)``).
     """
     idx = page_index.select("url_canon",
                             F.col("warc_ts").alias("page_ts"),
@@ -158,7 +160,6 @@ def crawl(spark: SparkSession, page_index: DataFrame, seeds: DataFrame,
           resume: bool = False,
           bloom_bits_per_bucket: int | None = None,
           target_fpp: float = DEFAULT_TARGET_FPP,
-          fetch_mode: str = "auto",
           broadcast_fetch_max: int = DEFAULT_BROADCAST_FETCH_MAX,
           sitemap_offers: DataFrame | None = None,
           window_ms: int | None = None,
@@ -203,10 +204,10 @@ def crawl(spark: SparkSession, page_index: DataFrame, seeds: DataFrame,
     ever scanned (the gate prunes it to the round's hosts before
     broadcasting).
 
-    fetch_mode: "broadcast" | "copartition" | "auto" (broadcast while
-    the scheduled batch is ≤ broadcast_fetch_max rows, co-partitioned
-    join beyond — the batch row count is already on the driver, so
-    the switch costs nothing).
+    broadcast_fetch_max: the fetch join broadcasts the scheduled batch
+    while it is ≤ this many rows and takes the co-partitioned join
+    beyond (0 always co-partitions). The batch row count is already
+    on the driver, so the choice costs nothing.
     """
     if bloom_bits_per_bucket is None:
         bloom_bits_per_bucket = (seenmod.DEFAULT_BITS_PER_KEY
@@ -275,8 +276,8 @@ def crawl(spark: SparkSession, page_index: DataFrame, seeds: DataFrame,
                 spark, round_no, frontier, robots, page_index, store,
                 budget_per_host, num_buckets, bloom_bits, rebuild_bloom,
                 have_bloom, seen_exact, seen_bloom, blocked,
-                blocked_pending, fetch_mode, broadcast_fetch_max,
-                target_fpp, window_ms, robots_docs, robots_pending)
+                blocked_pending, broadcast_fetch_max, target_fpp,
+                window_ms, robots_docs, robots_pending)
         finally:
             _release_ckpts()
         if stop:
@@ -332,12 +333,10 @@ def _ckpt(df: DataFrame) -> DataFrame:
     commit-site note in snapshots.py)."""
     level = (StorageLevel.MEMORY_AND_DISK_2
              if os.environ.get("FRONTIER_CKPT_REPLICATED") else None)
-    out = df.localCheckpoint(eager=False, storageLevel=level)
-    _CKPT_LIVE.append(session.checkpoint_rdd(out))
-    return out
+    return session.checkpoint(df, _CKPT_LIVE, level)
 
 
-_CKPT_LIVE: list = []  # java RDD handles (session.checkpoint_rdd)
+_CKPT_LIVE: list = []  # java RDD handles (session.checkpoint)
 
 
 def _release_ckpts() -> None:
@@ -345,12 +344,7 @@ def _release_ckpts() -> None:
     release. Called once per crawl round (and at crawl exit): by then
     the round's state lives in the committed snapshot, so no live
     plan references the truncated-lineage blocks any more."""
-    while _CKPT_LIVE:
-        jrdd = _CKPT_LIVE.pop()
-        try:
-            jrdd.unpersist(False)
-        except Exception:
-            pass  # session teardown race — blocks die with the context
+    session.release(_CKPT_LIVE)
 
 
 def _acquire_robots(known: DataFrame, offers_with_host: DataFrame,
@@ -381,8 +375,8 @@ def _acquire_robots(known: DataFrame, offers_with_host: DataFrame,
 def _crawl_round(spark, round_no, frontier, robots, page_index, store,
                  budget_per_host, num_buckets, bloom_bits, rebuild_bloom,
                  have_bloom, seen_exact, seen_bloom, blocked,
-                 blocked_pending, fetch_mode, broadcast_fetch_max,
-                 target_fpp, window_ms=None, robots_docs=None,
+                 blocked_pending, broadcast_fetch_max, target_fpp,
+                 window_ms=None, robots_docs=None,
                  robots_pending=None) -> bool:
     """One crawl round; returns True when the frontier is exhausted.
     Every intermediate the round materializes goes through
@@ -430,11 +424,8 @@ def _crawl_round(spark, round_no, frontier, robots, page_index, store,
     # simply don't match (inner join), and seen-marking uses
     # `batch` directly so nothing is lost. Persisted: feeds both
     # the results write and link discovery.
-    if fetch_mode == "auto":
-        mode = "broadcast" if n_scheduled <= broadcast_fetch_max \
-            else "copartition"
-    else:
-        mode = fetch_mode
+    mode = "broadcast" if n_scheduled <= broadcast_fetch_max \
+        else "copartition"
     fetched = _ckpt(fetch_pages(page_index, batch, mode))
     results = fetched.where(F.col("text").isNotNull()) \
         .select("url_canon", "text",

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from . import session
 
-_CKPT_LIVE: list = []  # java RDD handles (session.checkpoint_rdd)
+_CKPT_LIVE: list = []  # java RDD handles (session.checkpoint)
 
 
 def release_checkpoints() -> None:
@@ -25,12 +25,7 @@ def release_checkpoints() -> None:
     repeatedly must release between calls or the cached left
     relations accumulate until driver GC (measured ~2× in-session
     degradation — r4 ADVICE)."""
-    while _CKPT_LIVE:
-        jrdd = _CKPT_LIVE.pop()
-        try:
-            jrdd.unpersist(False)
-        except Exception:
-            pass  # session teardown race
+    session.release(_CKPT_LIVE)
 
 
 def sessionize(events: DataFrame, gap_seconds: int = 60,
@@ -175,14 +170,15 @@ def range_join_count(left: DataFrame, right: DataFrame,
     # tag the SAME row with DIFFERENT ids and silently corrupt the
     # join-back. The checkpoint materializes the id assignment once;
     # both branches read the same stored rows.
-    lid = left.withColumn("_lid", F.monotonically_increasing_id()) \
-        .localCheckpoint(eager=False)
-    # track for release_checkpoints(): the RESULT's lineage is
+    #
+    # Tracked for release_checkpoints(): the RESULT's lineage is
     # truncated at this checkpoint, so the blocks cannot be freed
     # here — they accumulate over a long session (measured ~2×
     # degradation) unless the caller frees them once the result is
     # consumed (r4 ADVICE).
-    _CKPT_LIVE.append(session.checkpoint_rdd(lid))
+    lid = session.checkpoint(
+        left.withColumn("_lid", F.monotonically_increasing_id()),
+        _CKPT_LIVE)
     lb = (lid
           .select(*keys, "_lid", lus.alias("_lus"))
           .withColumn("_b", F.explode(F.sequence(

@@ -54,15 +54,19 @@ def with_url_canon(df: DataFrame, url_col: str = "url") -> DataFrame:
     return df.withColumn("url_canon", _canon_udf()(F.col(url_col)))
 
 
+def canon_host(canon_col: str = "url_canon"):
+    """Column: the host of a CANONICAL URL (lowercase scheme, no
+    userinfo), "" where absent. Raw URLs take urlcanon.host_expr."""
+    return F.regexp_extract(F.col(canon_col),
+                            r"^[a-z][a-z0-9+.-]*://([^/:?#]+)", 1)
+
+
 def with_host(df: DataFrame, canon_col: str = "url_canon",
               num_buckets: int = DEFAULT_HOST_BUCKETS,
               num_salts: int = DEFAULT_SALTS) -> DataFrame:
     """host, host_bucket, salt — pure Spark SQL on the canonical URL."""
     return (df
-            .withColumn("host",
-                        F.regexp_extract(F.col(canon_col),
-                                         r"^[a-z][a-z0-9+.-]*://([^/:?#]+)",
-                                         1))
+            .withColumn("host", canon_host(canon_col))
             .withColumn("host_bucket",
                         F.pmod(F.xxhash64("host"),
                                F.lit(num_buckets)).cast("int"))

@@ -72,3 +72,28 @@ def checkpoint_rdd(df):
     downstream consumer is done (the lineage is truncated: blocks
     gone = result unrecomputable)."""
     return df._jdf.queryExecution().analyzed().rdd()
+
+
+def checkpoint(df, live: list, level=None):
+    """LAZY ``localCheckpoint`` of ``df`` whose java RDD handle is
+    pushed onto the caller-owned ``live`` list; :func:`release` frees
+    exactly those blocks. Each owner keeps its own list, so one
+    owner's release never drops blocks another owner (or a
+    concurrent job in the same session) still reads. ``level`` is a
+    ``StorageLevel`` (None: localCheckpoint's default level)."""
+    out = df.localCheckpoint(eager=False, storageLevel=level)
+    live.append(checkpoint_rdd(out))
+    return out
+
+
+def release(live: list) -> None:
+    """Unpersist every handle :func:`checkpoint` pushed onto ``live``
+    and empty the list. Call only once every consumer of the
+    checkpointed DataFrames is done: their lineage is truncated, so
+    they cannot recompute once the blocks are gone."""
+    while live:
+        jrdd = live.pop()
+        try:
+            jrdd.unpersist(False)
+        except Exception:
+            pass  # session teardown race — blocks die with the context

@@ -33,11 +33,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import session
+
 ENTRY_DDL = ("sitemap_url string, kind string, loc string, "
              "lastmod_us bigint, changefreq string, priority double, "
              "is_child boolean")
 
-_CKPT_LIVE: list = []  # java RDD handles (session.checkpoint_rdd)
+_CKPT_LIVE: list = []  # java RDD handles (session.checkpoint)
 
 
 def release_checkpoints() -> None:
@@ -47,20 +49,11 @@ def release_checkpoints() -> None:
     the checkpoints truncate lineage, so an unconsumed result cannot
     recompute once the blocks are gone (same contract as
     eventops.release_checkpoints, r4 ADVICE)."""
-    while _CKPT_LIVE:
-        jrdd = _CKPT_LIVE.pop()
-        try:
-            jrdd.unpersist(False)
-        except Exception:
-            pass  # session teardown race
+    session.release(_CKPT_LIVE)
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
-    from frontier.spark import session
-
-    out = df.localCheckpoint(eager=False)
-    _CKPT_LIVE.append(session.checkpoint_rdd(out))
-    return out
+    return session.checkpoint(df, _CKPT_LIVE)
 
 
 def discover_offers(fetched_robots: DataFrame, sitemap_docs: DataFrame,

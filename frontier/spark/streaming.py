@@ -1,16 +1,17 @@
-"""Structured Streaming wrappers: incremental page ingestion.
+"""Structured Streaming operators and the streaming curate pipeline.
 
-The reference is batch-only; the north_rule's crawl rounds are batch
-iterations with snapshot checkpoints (crawl.py). This module adds the
-streaming face of the same operators for continuous ingestion
-deployments: new page files land in a directory (or Kafka topic on a
-real cluster), main text + links flow out incrementally, with
-watermarked per-window crawl metrics and a stateful per-host rate
-limiter (``applyInPandasWithState``).
+The crawl loop is batch only: each round is one batch iteration with a
+snapshot commit (``crawl.crawl``), which is also what makes it
+resumable. This module holds the streaming face of the per-page
+operators for continuous-ingestion deployments: new page files land
+in a directory (or a Kafka topic on a real cluster) and main text
+flows out incrementally, with watermarked per-window crawl metrics, a
+stateful per-host rate limiter and a stateful first-seen URL set
+(``applyInPandasWithState``). :func:`streaming_curate` runs the
+curate gates over documents as they arrive.
 
 ``trigger(availableNow=True)`` gives exactly-once batch-incremental
-runs — the streaming analog of one crawl round — which is what the
-tests exercise (no always-on cluster in the sandbox).
+runs, which is what the tests exercise.
 """
 
 from __future__ import annotations
@@ -19,7 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .parse import MAIN_TEXT_CANON_DDL, extract_main_text
+from .parse import extract_main_text
+from .schedule import canon_host
 
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                 "text string, lang string")
@@ -71,9 +73,7 @@ def rate_limited_hosts(texts_stream: DataFrame, budget_per_trigger: int,
     applyInPandasWithState (the reference has no analog; SURVEY.md
     §2.7 'Streaming').
     """
-    hosts = texts_stream.withColumn(
-        "host", F.regexp_extract(F.col(host_col),
-                                 r"^[a-z][a-z0-9+.-]*://([^/:?#]+)", 1))
+    hosts = texts_stream.withColumn("host", canon_host(host_col))
 
     def limiter(key, pdfs, state: GroupState):
         total = state.get[0] if state.exists else 0
@@ -133,488 +133,6 @@ def first_seen_texts(texts_stream: DataFrame) -> DataFrame:
             .applyInPandasWithState(dedup, FIRST_SEEN_OUT_DDL,
                                     SEEN_STATE_DDL, "append",
                                     GroupStateTimeout.NoTimeout))
-
-
-def streaming_crawl_round(spark: SparkSession, pages_path: str,
-                          seeds: DataFrame, robots: DataFrame | None,
-                          budget_per_host: int,
-                          out_path: str, checkpoint: str,
-                          max_files_per_trigger: int | None = None):
-    """One incremental crawl round as an ``availableNow`` streaming
-    job — the streaming twin of ``crawl.crawl(max_rounds=1)``
-    (round-2 VERDICT item 9), composing the existing pieces:
-
-    1. schedule the seed frontier exactly like the batch round
-       (canon → robots gate → skew-safe politeness cut — all batch:
-       the scheduled set is small and static for the round);
-    2. stream pages as files land (parquet file source; several
-       triggers under availableNow when ``max_files_per_trigger``
-       is set);
-    3. stream-static broadcast semi-join onto the scheduled set —
-       page bytes never shuffle, same property as the batch fetch;
-    4. incremental main-text extraction (same Arrow kernel);
-    5. exactly-once per url across triggers via the stateful seen
-       set (:func:`first_seen_texts`);
-    6. append results parquet (url_canon, text) + checkpoint.
-
-    tests/test_streaming.py proves the results table is identical to
-    ``crawl.crawl(max_rounds=1)``'s round-0 results over the same
-    pages/seeds/robots/budget.
-    """
-    from . import crawl as crawlmod
-    from . import schedule as sched
-
-    frontier = crawlmod._seed_frontier(seeds)
-    batch = sched.schedule(frontier, robots, budget_per_host) \
-        .select("url_canon")
-    stream = stream_pages(spark, pages_path, max_files_per_trigger)
-    texts = stream_extract(stream) \
-        .join(F.broadcast(batch), "url_canon") \
-        .where(F.col("text").isNotNull())
-    once = first_seen_texts(texts).select("url_canon", "text")
-    return run_available_now(once, out_path, checkpoint)
-
-
-def run_available_now(df: DataFrame, out_path: str, checkpoint: str,
-                      output_mode: str = "append"):
-    """Run a streaming DF to parquet with availableNow (one
-    batch-incremental pass), blocking until done."""
-    query = (df.writeStream
-             .outputMode(output_mode)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", checkpoint)
-             .format("parquet")
-             .option("path", out_path)
-             .start())
-    query.awaitTermination()
-    return query
-
-
-# ---------------------------------------------------------------------------
-# Multi-round streaming crawl loop (round-5, r4 VERDICT item 3)
-# ---------------------------------------------------------------------------
-
-OFFER_DDL = ("url_canon string, priority int, warc_ts timestamp, "
-             "cap int")
-FRONTIER_STATE_DDL = "pending binary, seen binary, cap bigint"
-SCHED_OUT_DDL = ("host string, url_canon string, priority int, "
-                 "warc_ts timestamp")
-
-
-def _frontier_state_fn(budget_per_host: int):
-    """Per-host frontier as STREAMING STATE: the politeness queue and
-    the seen set live in the state store, keyed by host, so the whole
-    batch-loop seen/bloom/window machinery disappears from the
-    per-round plan. Semantics mirror the batch round exactly:
-
-    * an offer for a url already seen OR already pending is dropped
-      (the batch loop's filter_unseen + leftover anti-join —
-      first-offer-wins);
-    * offers within one trigger min-merge per url by
-      (priority, warc_ts) (the batch discovery groupBy);
-    * each trigger emits the top ``budget_per_host`` pending urls by
-      (priority, warc_ts, url_canon) — politeness_cut's exact order —
-      marks them seen, and keeps the rest pending; offers carry an
-      optional per-host ``cap`` column (the robots Crawl-delay
-      budget, ``min(budget, max(1, window_ms // delay))`` — attached
-      at offer-write time by streaming_crawl since robots(host) is
-      immutable) which overrides the budget and persists in state so
-      timeout-only re-offers honor it;
-    * a host with leftover pending work arms a 1 ms processing-time
-      timeout so the NEXT trigger re-invokes it even with no new
-      offers (the batch loop re-ranks leftovers every round); a host
-      with an empty queue sleeps until offered again — better than
-      the batch loop's inherent O(frontier) re-scan per round.
-
-    State is pickled per host. At 10^10 urls the state store shards
-    by host across executors (RocksDB on a real cluster); a hot
-    host's blob rewrite per trigger is the same O(host-frontier)
-    cost the batch loop pays re-sorting that host's rows. (The
-    row-per-url state layout of ``transformWithStateInPandas`` —
-    MapState keyed by url — would cut the per-trigger state WRITE
-    from O(host-frontier) to O(delta) and eliminate the multi-MB
-    single-cell Arrow blobs entirely. The API ships in pyspark
-    4.1.2, but its Python<->JVM state server speaks protobuf and the
-    ``google.protobuf`` runtime is absent in this container
-    [verified: the query fails at StreamingPythonRunner init with
-    ImportError], so the blob layout stays; on a real cluster with
-    protobuf installed, porting this fn to a StatefulProcessor is
-    the designated upgrade path.)
-    """
-    import pickle
-    import zlib
-
-    def fn(key, pdfs, state: GroupState):
-        # state blobs are zlib-compressed (~10× on URL text): the
-        # Arrow state channel copies its buffer on every growth step,
-        # so a hot host's multi-MB pickled queue otherwise turns into
-        # quadratic memcpy (measured: one 25 MB blob stalled its task
-        # for minutes; compressed, the same state moves in seconds)
-        if state.exists:
-            pending = pickle.loads(zlib.decompress(state.get[0]))
-            seen = set(pickle.loads(zlib.decompress(state.get[1])))
-            cap = state.get[2] if state.get[2] is not None \
-                and state.get[2] >= 0 else None  # -1 = no cap stored
-        else:
-            pending, seen, cap = {}, set(), None
-        rows = [pdf for pdf in pdfs if len(pdf)]
-        if rows:
-            allo = pd.concat(rows, ignore_index=True)
-            caps = allo["cap"].dropna()
-            if len(caps):  # host-constant by construction
-                cap = int(caps.min())
-            ts_us = allo["warc_ts"].to_numpy() \
-                .astype("datetime64[us]").astype("int64")
-            cand: dict[str, tuple[int, int]] = {}
-            for url, pr, ts in zip(allo["url_canon"],
-                                   allo["priority"], ts_us):
-                offer = (int(pr), int(ts))
-                if url not in cand or offer < cand[url]:
-                    cand[url] = offer
-            for url, offer in cand.items():
-                if url not in seen and url not in pending:
-                    pending[url] = offer
-        take = sorted(pending.items(),
-                      key=lambda kv: (kv[1][0], kv[1][1], kv[0]))
-        take = take[:budget_per_host if cap is None else int(cap)]
-        for url, _ in take:
-            del pending[url]
-            seen.add(url)
-        state.update((zlib.compress(pickle.dumps(pending), 1),
-                      zlib.compress(pickle.dumps(sorted(seen)), 1),
-                      -1 if cap is None else int(cap)))
-        if pending:
-            state.setTimeoutDuration(1)  # re-offer leftovers next trigger
-        if take:
-            yield pd.DataFrame({
-                "host": [key[0]] * len(take),
-                "url_canon": [u for u, _ in take],
-                "priority": [o[0] for _, o in take],
-                "warc_ts": pd.to_datetime(
-                    [o[1] for _, o in take], unit="us"),
-            })
-
-    return fn
-
-
-def streaming_crawl(spark: SparkSession, page_index: DataFrame,
-                    seeds: DataFrame, robots: DataFrame | None,
-                    budget_per_host: int, work_dir: str,
-                    max_rounds: int = 5,
-                    trigger_interval: str = "1 second",
-                    poll_sec: float = 0.2,
-                    state_partitions: int | None = None,
-                    sitemap_offers: DataFrame | None = None,
-                    robots_docs: DataFrame | None = None,
-                    window_ms: int | None = None) -> dict:
-    """The N-round crawl as ONE long-lived incremental streaming
-    query (r3/r4 VERDICT: the batch loop re-plans every round; here
-    the frontier plan — file source → per-host stateful schedule —
-    is compiled ONCE and micro-batches ride it).
-
-    Dataflow (feedback through the filesystem, the streaming analog
-    of the batch loop's snapshot round-trip):
-
-    1. seed offers land as round-0 parquet in ``offers/``;
-    2. the query schedules each micro-batch via
-       :func:`_frontier_state_fn` (seen set + politeness queue in the
-       state store — no bloom build/merge/probe, no window chain, no
-       per-round seen/frontier table commits);
-    3. ``foreachBatch``: fetch the scheduled urls against the static
-       ``page_index`` (broadcast — page bytes never shuffle), write
-       results parquet for the round, then explode links → canon →
-       robots entry-gate and write the gated discoveries to
-       ``staging/``; rounds INSIDE the horizon are then PROMOTED
-       (directory rename) into ``offers/`` — which is what triggers
-       the next round;
-    4. the driver polls round progress and stops the query when
-       round ``max_rounds - 1`` commits or a round schedules
-       nothing.
-
-    Horizon enforcement is by STARVATION, never by discarding: the
-    last in-horizon round's discoveries stay in ``staging/``, so no
-    batch beyond the horizon ever runs — critical for restart,
-    because a batch consumes per-host state (urls get marked seen
-    when scheduled) and a discarded emission would lose those urls
-    forever. No-data micro-batches are disabled for the same reason
-    (a timeout-only batch past the horizon would also consume
-    state). On re-invocation with a larger horizon, the staged
-    rounds are promoted and the checkpoint restores offsets + state,
-    so the crawl continues exactly where it stopped; batch ids (=
-    round numbers) are sequential across restarts by construction.
-
-    ``state_partitions`` pins the stateful exchange's
-    shuffle-partition count for this query (the state store writes
-    one delta file per partition per micro-batch and the count is
-    FROZEN into the checkpoint at the first trigger — resumes keep
-    it regardless of session settings). Size it to the per-trigger
-    DELTA, not the cluster: the measured width response inverts
-    otherwise (BENCH/BASELINE.md §streaming-loop). The session's
-    ``spark.sql.shuffle.partitions`` is restored before the first
-    batch's fetch work, so batch-side joins keep full parallelism.
-
-    ``sitemap_offers`` / ``robots_docs`` mirror the batch loop's
-    continuous-ingestion seed/state sources (crawl.crawl) — r5
-    VERDICT missing-item 1, because the regime streaming wins
-    (many small rounds, continuous arrival) is exactly the one that
-    meets unknown hosts constantly:
-
-    * sitemap_offers: FRONTIER_COLS relation unioned into the seed
-      round, seed rows winning on overlap (the batch anti-join rule).
-      Ignored on resume — the seeded round-0 file already absorbed
-      them.
-    * robots_docs: (host, robots_txt bytes) switches the gate to
-      INCREMENTAL robots acquisition (``robots`` is ignored, as in
-      the batch loop): each micro-batch anti-joins its discovery
-      hosts against the known relation, fetch-joins + parses only
-      the new ones (crawl._acquire_robots — same function, same
-      null-rule rows for absent docs), and appends the delta to a
-      ``robots_rules/`` parquet state table under ``work_dir``.
-      Restart-safe by idempotence: a replayed batch finds its hosts
-      already known, so the delta is empty and the gate — a pure
-      function of (host → rules) — decides identically.
-    * window_ms: honor robots Crawl-delay in the per-host budget
-      (the batch loop's politeness_cut rule: a host with delay d ms
-      serves at most max(1, window_ms // d) per round). The cap is
-      attached to offer rows at write time (robots(host) is
-      immutable) and persisted in the host's state, so the
-      long-lived streaming plan never references the robots
-      relation and timeout-only re-offers stay capped.
-
-    Returns {"rounds": n, "scheduled_per_round": {...}}.
-    tests/test_streaming.py proves N-round results identical to
-    ``crawl.crawl(max_rounds=N)`` — including across a stop/resume,
-    and with both sources live.
-    """
-    import os
-    import time
-
-    from . import crawl as crawlmod
-    from . import schedule as sched
-
-    offers_dir = os.path.join(work_dir, "offers")
-    staging_dir = os.path.join(work_dir, "staging")
-    results_dir = os.path.join(work_dir, "results")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-    robots_dir = os.path.join(work_dir, "robots_rules")
-    os.makedirs(offers_dir, exist_ok=True)
-    os.makedirs(staging_dir, exist_ok=True)
-
-    incremental = robots_docs is not None
-
-    def robots_state() -> DataFrame:
-        # explicit schema: the append table may hold only empty
-        # data files right after a no-new-host round
-        return spark.read.schema(sched.ROBOTS_DDL).parquet(robots_dir)
-
-    def attach_cap(sel: DataFrame, gate: DataFrame | None) -> DataFrame:
-        """FRONTIER_COLS offers → OFFER_DDL rows: the per-host
-        Crawl-delay budget (``window_ms``, the batch loop's
-        politeness_cut rule: min(budget, max(1, window_ms // delay));
-        no/zero delay keeps the full budget) is attached AT
-        OFFER-WRITE TIME — robots(host) is immutable, so the cap is
-        a constant per host and can ride the offer files into the
-        state store instead of joining the robots relation into the
-        long-lived streaming plan."""
-        if window_ms is None or gate is None:
-            return sel.withColumn(
-                "cap", F.lit(int(budget_per_host)).cast("int"))
-        delays = gate.select(
-            "host", F.coalesce(F.col("crawl_delay_ms"), F.lit(0))
-            .alias("_d"))
-        withh = (sched.with_host(sel).join(delays, "host", "left")
-                 .withColumn("_d", F.coalesce(F.col("_d"), F.lit(0))))
-        capped = F.greatest(
-            F.lit(1),
-            (F.lit(int(window_ms)) / F.greatest(F.col("_d"), F.lit(1)))
-            .cast("long"))
-        cap = F.when(F.col("_d") > 0,
-                     F.least(F.lit(budget_per_host).cast("long"),
-                             capped)) \
-            .otherwise(F.lit(budget_per_host))
-        return withh.withColumn("cap", cap.cast("int")) \
-            .select("url_canon", "priority", "warc_ts", "cap")
-
-    def promote(round_id: int) -> None:
-        src = os.path.join(staging_dir, f"round_{round_id:05d}")
-        dst = os.path.join(offers_dir, f"round_{round_id:05d}")
-        if os.path.exists(src) and not os.path.exists(dst):
-            os.rename(src, dst)
-
-    seeded_marker = os.path.join(work_dir, "_seeded")
-    if not os.path.exists(seeded_marker):
-        frontier = crawlmod._seed_frontier(seeds)
-        if sitemap_offers is not None:
-            frontier = frontier.unionByName(
-                sitemap_offers.select(*crawlmod.FRONTIER_COLS)
-                .join(frontier.select("url_canon"),
-                      "url_canon", "left_anti"))
-        gate = robots
-        if incremental:
-            # acquire robots for the seed/sitemap hosts before the
-            # entry gate (the batch loop's round-0 contract); the
-            # staged frontier is read by both the acquisition
-            # anti-join and the gate, so checkpoint it once
-            frontier = crawlmod._ckpt(frontier)
-            crawlmod._acquire_robots(
-                spark.createDataFrame([], sched.ROBOTS_DDL),
-                sched.with_host(frontier), robots_docs) \
-                .write.mode("overwrite").parquet(robots_dir)
-            gate = robots_state()
-        if gate is not None:
-            frontier, _blocked = crawlmod._gate_frontier(frontier, gate)
-        attach_cap(frontier.select("url_canon", "priority", "warc_ts"),
-                   gate) \
-            .write.mode("overwrite") \
-            .parquet(os.path.join(offers_dir, "round_00000"))
-        crawlmod._release_ckpts()
-        open(seeded_marker, "w").close()
-    else:
-        # resume: rounds staged past the previous horizon enter the
-        # source now that the horizon moved
-        for name in sorted(os.listdir(staging_dir)):
-            rid = int(name.rsplit("_", 1)[-1])
-            if rid < max_rounds:
-                promote(rid)
-
-    progress: dict[int, int] = {}
-
-    shuffle_key = "spark.sql.shuffle.partitions"
-    shuffle_prev = spark.conf.get(shuffle_key)
-
-    def fetch_and_discover(sched_df: DataFrame, batch_id: int):
-        # the micro-batch's stateful plan is already compiled when
-        # foreachBatch runs, so widening the CLONED stream session
-        # here affects only the batch-side fetch/discovery plans —
-        # the state exchange keeps its checkpoint-pinned width
-        if state_partitions is not None:
-            sched_df.sparkSession.conf.set(shuffle_key, shuffle_prev)
-        fetched = crawlmod.fetch_pages(
-            page_index, sched_df, "broadcast").persist()
-        try:
-            n_sched = sched_df.count()
-            if n_sched == 0:
-                progress[batch_id] = 0
-                return
-            (fetched.where(F.col("text").isNotNull())
-             .select("url_canon", "text",
-                     F.lit(batch_id).alias("round"))
-             .write.mode("overwrite")
-             .parquet(os.path.join(results_dir, f"round={batch_id}")))
-            raw = (fetched.where(F.col("links").isNotNull())
-                   .select("priority", "page_ts",
-                           F.explode("links").alias("link")))
-            cand = (sched.with_url_canon(raw, "link")
-                    .where(F.col("url_canon").isNotNull())
-                    .groupBy("url_canon")
-                    .agg(F.min(F.struct(
-                        (F.col("priority") + 1).alias("priority"),
-                        F.col("page_ts").alias("warc_ts"))).alias("o"))
-                    .select("url_canon", "o.priority", "o.warc_ts"))
-            gate = robots
-            if robots is not None or incremental:
-                staged = sched.with_host(
-                    cand.localCheckpoint(eager=False))
-                if incremental:
-                    # append exactly this batch's never-seen hosts
-                    # to the robots state table, then gate against
-                    # the refreshed relation; a replayed batch adds
-                    # nothing (its hosts are already known)
-                    crawlmod._acquire_robots(
-                        robots_state(), staged, robots_docs) \
-                        .write.mode("append").parquet(robots_dir)
-                    gate = robots_state()
-                gated = sched.apply_robots(staged, gate)
-                cand = gated.where(F.col("robots_allowed"))
-            # ALWAYS write the round's discovery file (even empty —
-            # its arrival is what fires the next round, where
-            # leftover pending hosts re-offer via their state
-            # timeout), but only PROMOTE it inside the horizon
-            nxt = os.path.join(staging_dir, f"round_{batch_id + 1:05d}")
-            (attach_cap(cand.select("url_canon", "priority", "warc_ts"),
-                        gate)
-             .write.mode("overwrite").parquet(nxt))
-            if not any(f.endswith(".parquet") for f in os.listdir(nxt)):
-                # empty discovery sets can emit zero data files; the
-                # next trigger needs at least one new file to fire
-                spark.createDataFrame([], OFFER_DDL).coalesce(1) \
-                    .write.mode("append").parquet(nxt)
-            if batch_id + 1 < max_rounds:
-                promote(batch_id + 1)
-            # recorded LAST: the monitor stopping on this round id
-            # implies every write above is committed (restart-safe)
-            progress[batch_id] = n_sched
-        finally:
-            fetched.unpersist()
-
-    # each round is its own subdirectory; the glob makes the file
-    # source list files one level down (a bare directory path would
-    # ignore non-partition subdirs entirely)
-    offers = spark.readStream.schema(OFFER_DDL) \
-        .parquet(os.path.join(offers_dir, "*"))
-    hosts = offers.withColumn(
-        "host", F.regexp_extract(F.col("url_canon"),
-                                 r"^[a-z][a-z0-9+.-]*://([^/:?#]+)", 1))
-    scheduled = hosts.groupBy("host").applyInPandasWithState(
-        _frontier_state_fn(budget_per_host), SCHED_OUT_DDL,
-        FRONTIER_STATE_DDL, "append",
-        GroupStateTimeout.ProcessingTimeTimeout)
-
-    # no-data micro-batches would let a timeout-only batch run past
-    # the horizon and consume state it can never replay — off for
-    # the duration of this query (restored below). In-horizon
-    # leftover rounds don't need them: every round promotes a file.
-    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    nodata_prev = spark.conf.get(nodata_key, "true")
-    spark.conf.set(nodata_key, "false")
-    if state_partitions is not None:
-        # inherited by the stream's cloned session at start(); the
-        # FIRST trigger freezes it into the checkpoint as the state
-        # partition count (resumes ignore session settings)
-        spark.conf.set(shuffle_key, str(state_partitions))
-    query = (scheduled.writeStream
-             .outputMode("append")
-             .foreachBatch(fetch_and_discover)
-             .trigger(processingTime=trigger_interval)
-             .option("checkpointLocation", ckpt_dir)
-             .start())
-    try:
-        last_advance = time.time()
-        seen_rounds = 0
-        while True:
-            if any(n == 0 for n in progress.values()) \
-                    or (max_rounds - 1) in progress:
-                break
-            if len(progress) != seen_rounds:
-                seen_rounds = len(progress)
-                last_advance = time.time()
-            if query.exception() is not None:
-                raise query.exception()
-            if time.time() - last_advance > 120:
-                # starvation guard: nothing left to process (e.g. a
-                # resume where every in-horizon round was already
-                # committed) — the query idles by design, stop it
-                break
-            time.sleep(poll_sec)
-    finally:
-        # stop between triggers: interrupting a mid-flight
-        # foreachBatch py4j call makes Spark's interruption
-        # classifier (StreamExecution.isInterruptionException)
-        # regex-scan the embedded Python traceback and overflow the
-        # stack — harmless but noisy. The terminal round's discovery
-        # file stays unpromoted, so the engine idles right after it —
-        # the idle window is wide.
-        deadline = time.time() + 30
-        while (query.status.get("isTriggerActive")
-               and time.time() < deadline):
-            time.sleep(0.05)
-        query.stop()
-        query.awaitTermination()
-        spark.conf.set(nodata_key, nodata_prev)
-        spark.conf.set(shuffle_key, shuffle_prev)
-    rounds = sorted(b for b in progress if progress.get(b, 0) > 0)
-    return {"rounds": len(rounds),
-            "scheduled_per_round": {b: progress[b] for b in rounds}}
 
 
 # ---------------------------------------------------------------------------

@@ -1372,19 +1372,12 @@ def substring_dedup(docs: DataFrame, k: int = 50, min_count: int = 2,
     so the covered-position sets coincide with the paper's
     length-≥-k rule. The paper's sequential suffix array becomes:
 
-    1. one NARROW pass hashing each k-gram start (JVM ``transform``
-       over the start index sequence — slice + concat_ws + md5 per
-       element; the per-element work is real JVM hashing, so the
-       higher-order-function eval loop is a rounding error here,
-       unlike the arithmetic-lambda cosines r5/r6 de-interpreted —
-       measured: the whole shingle pass is ~1.2 s of the operator's
-       ~3.7 s steady state at sf0.1 on one task, count shuffle +
-       rebuild being the rest). Hashing cost is O(k·tokens) bytes;
-       at k=50 a Rabin-Karp rolling hash would cut that 50× but has
-       no DuckDB-portable restatement (big-int modular arithmetic),
-       so the engine keeps the md5-of-window form the oracle can
-       verify — swap in a rolling hash on a real cluster if the
-       shingle pass ever dominates;
+    1. one NARROW Arrow-batched pass hashing every k-gram start
+       (:func:`substring_index`): each distinct token is hashed once
+       and two 64-bit Rabin-Karp lanes roll over the token hashes,
+       so the work is O(tokens), independent of k. The hash is
+       engine-internal: the oracle compares the rebuilt
+       ``clean_text``, never hashes;
     2. ONE corpus count on the uniform ``h`` key + the join back —
        the same shuffle discipline as paragraph_dedup, never a
        suffix array's global sort;

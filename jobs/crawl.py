@@ -29,8 +29,6 @@ def main():
     ap.add_argument("--cpus", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument("--num-buckets", type=int, default=64)
-    ap.add_argument("--fetch-mode", default="auto",
-                    choices=["auto", "broadcast", "copartition"])
     ap.add_argument("--target-fpp", type=float, default=0.02,
                     help="bloom saturation guard threshold")
     ap.add_argument("--acquire-robots", action="store_true",
@@ -55,33 +53,10 @@ def main():
                          "(index children followed) and the resulting "
                          "offers union into the initial frontier with "
                          "lastmod/priority priors "
-                         "(sitemaps.discover_offers); batch loop only")
+                         "(sitemaps.discover_offers)")
     ap.add_argument("--compact-expire", type=int, default=0, metavar="K",
                     help="after the crawl: compact results and expire "
                          "all but the newest K snapshots")
-    ap.add_argument("--streaming-round", action="store_true",
-                    help="run ONE incremental crawl round through the "
-                         "Structured-Streaming availableNow path "
-                         "(stream-static fetch + stateful exactly-once "
-                         "seen set) instead of the batch loop; "
-                         "restartable from its checkpoint, results "
-                         "proven identical to crawl(max_rounds=1) by "
-                         "tests/test_streaming.py")
-    ap.add_argument("--streaming", action="store_true",
-                    help="run the FULL --rounds crawl as ONE long-lived "
-                         "incremental streaming query (per-host frontier "
-                         "state in the state store, filesystem feedback "
-                         "loop) instead of the batch loop; results proven "
-                         "identical to crawl(max_rounds=N) by "
-                         "tests/test_streaming.py")
-    ap.add_argument("--state-partitions", type=int, default=None,
-                    help="pin the streaming query's state-store "
-                         "partition count (frozen into the checkpoint "
-                         "at the first trigger). Size to the "
-                         "per-trigger delta, not the cluster — the "
-                         "state store writes one delta file per "
-                         "partition per micro-batch "
-                         "(BENCH/BASELINE.md streaming-loop notes)")
     args = ap.parse_args()
 
     from frontier import synth
@@ -110,48 +85,6 @@ def main():
     else:
         robots = synth.robots_df(spark)
 
-    if args.streaming:
-        from frontier.spark import streaming
-
-        page_index = crawl.prepare_page_index(pages).cache()
-        stats = streaming.streaming_crawl(
-            spark, page_index, seeds,
-            None if args.acquire_robots else robots,
-            args.budget, args.out,
-            max_rounds=args.rounds,
-            state_partitions=args.state_partitions,
-            sitemap_offers=offers, robots_docs=robots_docs,
-            window_ms=args.window_ms)
-        results_dir = os.path.join(args.out, "results")
-        print(json.dumps({
-            "mode": "streaming",
-            "rounds_done": stats["rounds"],
-            "scheduled": sum(stats["scheduled_per_round"].values()),
-            "extracted_texts": spark.read.parquet(results_dir).count(),
-            "wall_sec": round(time.perf_counter() - t0, 2),
-        }))
-        spark.stop()
-        return
-
-    if args.streaming_round:
-        from frontier.spark import streaming
-
-        pages_dir = os.path.join(args.out, "pages")
-        if not os.path.exists(os.path.join(pages_dir, "_SUCCESS")):
-            pages.write.mode("overwrite").parquet(pages_dir)
-        out_dir = os.path.join(args.out, "streaming_results")
-        ckpt = os.path.join(args.out, "streaming_ckpt")
-        streaming.streaming_crawl_round(
-            spark, pages_dir, seeds, robots, args.budget,
-            out_dir, ckpt, max_files_per_trigger=8)
-        print(json.dumps({
-            "mode": "streaming_round",
-            "extracted_texts": spark.read.parquet(out_dir).count(),
-            "wall_sec": round(time.perf_counter() - t0, 2),
-        }))
-        spark.stop()
-        return
-
     page_index = crawl.prepare_page_index(pages).cache()
     store = SnapshotStore(args.out)
 
@@ -161,7 +94,6 @@ def main():
                            max_rounds=args.rounds,
                            num_buckets=args.num_buckets,
                            resume=args.resume,
-                           fetch_mode=args.fetch_mode,
                            target_fpp=args.target_fpp,
                            sitemap_offers=offers,
                            window_ms=args.window_ms,

@@ -438,3 +438,20 @@ def test_pair_cos_raw_bitwise_equals_sql_fold(spark):
     import struct
     for r in got:
         assert struct.pack("<d", r.fast) == struct.pack("<d", r.fold), r
+
+
+def test_pair_cos_zero_dim_vectors_score_null(spark):
+    """A non-empty batch of zero-length vectors must score one row
+    per input in both cosine kernels. The kernels return NaN for them
+    (no direction: 0/0), which Arrow hands back as NULL, the same as
+    a zero-norm vector. Returning a zero-length Series instead fails
+    the pandas UDF with a length mismatch."""
+    df = spark.createDataFrame(
+        [(0, [], []), (1, [], [])],
+        "pid long, va array<double>, vb array<double>").coalesce(1)
+    got = df.select(
+        "pid",
+        ann._pair_cos(F.col("va"), F.col("vb")).alias("quant"),
+        ann._pair_cos_raw(F.col("va"), F.col("vb")).alias("raw"),
+    ).orderBy("pid").collect()
+    assert [tuple(r) for r in got] == [(0, None, None), (1, None, None)]

@@ -110,6 +110,31 @@ def test_resume_reproduces_state(spark, corpus, spark_run,
     assert fa == fb
 
 
+def test_dry_frontier_stops_early(spark, corpus, sim_inputs,
+                                  tmp_path_factory):
+    """With a budget no host reaches, the synthetic graph runs dry
+    before ``max_rounds``: the round that schedules nothing ends the
+    crawl without a commit, and every committed round matches the
+    simulator's."""
+    _, page_index, seeds, _ = corpus
+    pages_map, seed_list, _ = sim_inputs
+    budget, horizon = 10_000, 8
+    sim = simulator.simulate(pages_map, seed_list, {},
+                             budget_per_host=budget, max_rounds=horizon)
+    assert 0 < len(sim.rounds) < horizon
+    store = SnapshotStore(str(tmp_path_factory.mktemp("crawl_dry")))
+    crawl.crawl(spark, page_index, seeds, None, store,
+                budget_per_host=budget, max_rounds=horizon, num_buckets=8)
+    assert store.snapshot_ids() == list(range(len(sim.rounds)))
+    for sid in store.snapshot_ids():
+        got = sorted(r.url_canon for r in
+                     store.read(spark, "batch", sid).collect())
+        assert got == sim.rounds[sid]["scheduled"], f"round {sid}"
+    results = crawl.collect_results(spark, store)
+    assert {r.url_canon: r.text for r in results.collect()} \
+        == sim.fetched_texts
+
+
 def test_lineage_and_metrics_recorded(spark_run):
     store, manifest = spark_run
     assert manifest["metrics"]["scheduled"] > 0
@@ -128,14 +153,15 @@ def test_robots_blocked_never_fetched(spark, spark_run, corpus):
 
 def test_copartition_fetch_identical_state(spark, corpus, sim_run,
                                            tmp_path_factory):
-    """fetch_mode='copartition' (the 10^8+-batch path: plain equi-join,
-    no broadcast) must produce byte-identical crawl state to the
-    broadcast fetch — the switch is purely physical."""
+    """broadcast_fetch_max=0 forces the co-partitioned fetch (the
+    10^8+-batch path: plain equi-join, no broadcast); it must produce
+    byte-identical crawl state to the broadcast fetch — the choice is
+    purely physical."""
     _, page_index, seeds, robots = corpus
     store = SnapshotStore(str(tmp_path_factory.mktemp("crawl_copart")))
     crawl.crawl(spark, page_index, seeds, robots, store,
                 budget_per_host=BUDGET, max_rounds=ROUNDS, num_buckets=8,
-                fetch_mode="copartition")
+                broadcast_fetch_max=0)
     seen = {r.url_canon for r in store.read(spark, "seen_exact").collect()}
     assert seen == sim_run.seen
     results = crawl.collect_results(spark, store)

@@ -1,7 +1,5 @@
 """Structured Streaming face of the engine (availableNow triggers)."""
 
-import os
-
 import pyspark.sql.functions as F
 import pytest
 
@@ -17,13 +15,26 @@ def pages_dir(spark, sf_dir, tmp_path_factory):
     return path
 
 
+def _drain(df, out_path, checkpoint):
+    """Run a streaming DataFrame to parquet in append mode as one
+    availableNow pass, blocking until it is done."""
+    (df.writeStream
+     .outputMode("append")
+     .trigger(availableNow=True)
+     .option("checkpointLocation", checkpoint)
+     .format("parquet")
+     .option("path", out_path)
+     .start()
+     .awaitTermination())
+
+
 def test_stream_extract_matches_batch(spark, sf_dir, pages_dir,
                                       tmp_path_factory):
     out = str(tmp_path_factory.mktemp("stream_out"))
     ckpt = str(tmp_path_factory.mktemp("stream_ckpt"))
     stream = streaming.stream_extract(
         streaming.stream_pages(spark, pages_dir))
-    streaming.run_available_now(stream, out, ckpt)
+    _drain(stream, out, ckpt)
 
     got = spark.read.parquet(out)
     batch = spark.read.parquet(pages_dir)
@@ -49,12 +60,12 @@ def test_stream_incremental_second_batch(spark, sf_dir, pages_dir,
     first = batch.limit(100)
     first.write.mode("append").parquet(src)
     stream = streaming.stream_extract(streaming.stream_pages(spark, src))
-    streaming.run_available_now(stream, out, ckpt)
+    _drain(stream, out, ckpt)
     n1 = spark.read.parquet(out).count()
 
     batch.limit(150).write.mode("append").parquet(src)
     stream = streaming.stream_extract(streaming.stream_pages(spark, src))
-    streaming.run_available_now(stream, out, ckpt)
+    _drain(stream, out, ckpt)
     n2 = spark.read.parquet(out).count()
     assert n1 == 100
     assert n2 == 250  # 100 + 150 appended rows, no reprocessing dups
@@ -72,7 +83,7 @@ def test_crawl_metrics_watermark(spark, sf_dir, pages_dir,
             streaming.stream_pages(spark, pages_dir,
                                    max_files_per_trigger=2)),
         window="1 minute", watermark="2 minutes")
-    streaming.run_available_now(stream, out, ckpt, output_mode="append")
+    _drain(stream, out, ckpt)
     got = spark.read.parquet(out)
     # 500 pages spread over ~500s → ~9 one-minute windows × langs
     assert got.count() > 0
@@ -86,7 +97,7 @@ def test_rate_limited_hosts_state(spark, sf_dir, pages_dir,
     stream = streaming.rate_limited_hosts(
         streaming.stream_extract(streaming.stream_pages(spark, pages_dir)),
         budget_per_trigger=5)
-    streaming.run_available_now(stream, out, ckpt, output_mode="append")
+    _drain(stream, out, ckpt)
     got = spark.read.parquet(out)
     assert got.where(F.col("n_allowed") > 5).count() == 0
     assert got.where(F.col("n_requested") > F.col("n_allowed")).count() > 0
@@ -104,7 +115,7 @@ def test_first_seen_texts_exactly_once(spark, sf_dir, pages_dir,
     batch.limit(100).write.mode("append").parquet(src)
     stream = streaming.first_seen_texts(
         streaming.stream_extract(streaming.stream_pages(spark, src)))
-    streaming.run_available_now(stream, out, ckpt, output_mode="append")
+    _drain(stream, out, ckpt)
     n1 = spark.read.parquet(out).count()
     assert n1 == 100
 
@@ -112,253 +123,11 @@ def test_first_seen_texts_exactly_once(spark, sf_dir, pages_dir,
     batch.limit(150).write.mode("append").parquet(src)
     stream = streaming.first_seen_texts(
         streaming.stream_extract(streaming.stream_pages(spark, src)))
-    streaming.run_available_now(stream, out, ckpt, output_mode="append")
+    _drain(stream, out, ckpt)
     got = spark.read.parquet(out)
     assert got.count() == 150  # only the 50 new urls added
     assert got.groupBy("url_canon").count() \
         .where(F.col("count") > 1).count() == 0
-
-
-def test_streaming_crawl_round_equals_batch_round(spark, sf_dir,
-                                                  pages_dir,
-                                                  tmp_path_factory):
-    """The availableNow streaming crawl round must produce the exact
-    results table of crawl.crawl(max_rounds=1) over the same pages,
-    seeds, robots, and budget — several triggers forced via
-    maxFilesPerTrigger so exactly-once state is actually exercised."""
-    from frontier.spark import crawl
-    from frontier.spark.snapshots import SnapshotStore
-
-    seeds = synth.seeds_from_documents(spark, sf_dir).cache()
-    robots = synth.robots_df(spark).cache()
-    budget = 3
-
-    # batch round
-    pages = spark.read.parquet(pages_dir)
-    page_index = crawl.prepare_page_index(pages).cache()
-    store = SnapshotStore(str(tmp_path_factory.mktemp("batch_round")))
-    crawl.crawl(spark, page_index, seeds, robots, store,
-                budget_per_host=budget, max_rounds=1, num_buckets=8)
-    batch_results = {(r.url_canon, r.text) for r in
-                     store.read(spark, "results").collect()}
-
-    # streaming round over the same parquet directory
-    out = str(tmp_path_factory.mktemp("stream_round_out"))
-    ckpt = str(tmp_path_factory.mktemp("stream_round_ckpt"))
-    streaming.streaming_crawl_round(
-        spark, pages_dir, seeds, robots, budget, out, ckpt,
-        max_files_per_trigger=1)
-    got = {(r.url_canon, r.text) for r in
-           spark.read.parquet(out).collect()}
-    assert got == batch_results and len(got) > 0
-
-
-def test_streaming_crawl_multiround_equals_batch(spark, sf_dir,
-                                                 pages_dir,
-                                                 tmp_path_factory):
-    """The N-round streaming crawl (ONE long-lived incremental query,
-    per-host frontier state, filesystem feedback — r4 VERDICT item 3)
-    must produce EXACTLY crawl.crawl(max_rounds=N)'s results table —
-    same (url_canon, text, round) triples — over the same pages,
-    seeds, robots, and budget. That requires the whole frontier
-    evolution to match: seen set, first-offer-wins merge, politeness
-    order, leftover re-offer, robots entry gate."""
-    from frontier.spark import crawl
-    from frontier.spark.snapshots import SnapshotStore
-
-    seeds = synth.seeds_from_documents(spark, sf_dir).cache()
-    robots = synth.robots_df(spark).cache()
-    budget, rounds = 3, 3
-
-    pages = spark.read.parquet(pages_dir)
-    page_index = crawl.prepare_page_index(pages).cache()
-
-    store = SnapshotStore(str(tmp_path_factory.mktemp("batch_n")))
-    crawl.crawl(spark, page_index, seeds, robots, store,
-                budget_per_host=budget, max_rounds=rounds,
-                num_buckets=8)
-    batch_results = {(r.url_canon, r.text, r.round) for r in
-                     crawl.collect_results(spark, store).collect()}
-
-    work = str(tmp_path_factory.mktemp("stream_n"))
-    stats = streaming.streaming_crawl(
-        spark, page_index, seeds, robots, budget, work,
-        max_rounds=rounds)
-    got = {(r.url_canon, r.text, r.round) for r in
-           spark.read.parquet(os.path.join(work, "results"))
-           .collect()}
-    assert stats["rounds"] == rounds
-    assert got == batch_results and len(got) > 0
-
-
-def test_streaming_crawl_stops_when_frontier_dry(spark, sf_dir,
-                                                 pages_dir,
-                                                 tmp_path_factory):
-    """With a huge budget the synthetic graph exhausts quickly: the
-    loop must stop on its own (a round scheduling zero urls) before
-    max_rounds, and match the batch loop's early-stop state."""
-    from frontier.spark import crawl
-    from frontier.spark.snapshots import SnapshotStore
-
-    seeds = synth.seeds_from_documents(spark, sf_dir).cache()
-    pages = spark.read.parquet(pages_dir)
-    page_index = crawl.prepare_page_index(pages).cache()
-
-    store = SnapshotStore(str(tmp_path_factory.mktemp("batch_dry")))
-    crawl.crawl(spark, page_index, seeds, None, store,
-                budget_per_host=10_000, max_rounds=8, num_buckets=8)
-    batch_results = {(r.url_canon, r.round) for r in
-                     crawl.collect_results(spark, store)
-                     .select("url_canon", "round").collect()}
-
-    work = str(tmp_path_factory.mktemp("stream_dry"))
-    stats = streaming.streaming_crawl(
-        spark, page_index, seeds, None, 10_000, work, max_rounds=8)
-    got = {(r.url_canon, r.round) for r in
-           spark.read.parquet(os.path.join(work, "results"))
-           .select("url_canon", "round").collect()}
-    assert stats["rounds"] < 8  # stopped on a dry frontier
-    assert got == batch_results
-
-
-def test_streaming_crawl_resumes_mid_crawl(spark, sf_dir, pages_dir,
-                                           tmp_path_factory):
-    """Restart safety (north_rule: resumable mid-crawl): run the
-    streaming loop for 2 rounds, stop, then re-invoke on the SAME
-    work dir with a larger horizon. The checkpoint restores source
-    offsets and per-host state (seen set + pending queues), the
-    seeded marker prevents re-seeding, and the combined results must
-    equal an uninterrupted batch crawl of the full horizon."""
-    from frontier.spark import crawl
-    from frontier.spark.snapshots import SnapshotStore
-
-    seeds = synth.seeds_from_documents(spark, sf_dir).cache()
-    robots = synth.robots_df(spark).cache()
-    budget, horizon = 3, 4
-
-    pages = spark.read.parquet(pages_dir)
-    page_index = crawl.prepare_page_index(pages).cache()
-
-    store = SnapshotStore(str(tmp_path_factory.mktemp("batch_ref4")))
-    crawl.crawl(spark, page_index, seeds, robots, store,
-                budget_per_host=budget, max_rounds=horizon,
-                num_buckets=8)
-    want = {(r.url_canon, r.text, r.round) for r in
-            crawl.collect_results(spark, store).collect()}
-
-    work = str(tmp_path_factory.mktemp("stream_resume"))
-    first = streaming.streaming_crawl(
-        spark, page_index, seeds, robots, budget, work, max_rounds=2)
-    assert first["rounds"] == 2
-    # resume: same work dir, full horizon — continues at round 2
-    second = streaming.streaming_crawl(
-        spark, page_index, seeds, robots, budget, work,
-        max_rounds=horizon)
-    got = {(r.url_canon, r.text, r.round) for r in
-           spark.read.parquet(os.path.join(work, "results"))
-           .collect()}
-    assert got == want and len(got) > 0
-    # the resumed run processed only the remaining rounds
-    assert all(b >= 2 for b in second["scheduled_per_round"])
-
-
-def test_streaming_crawl_pinned_state_partitions(spark, sf_dir,
-                                                 pages_dir,
-                                                 tmp_path_factory):
-    """state_partitions pins the state store's partition count to the
-    per-trigger delta (the measured width lever: one delta file per
-    partition per micro-batch, BENCH/BASELINE.md streaming-loop
-    notes) WITHOUT changing results or leaking the narrowed setting
-    into the session or the batch-side plans."""
-    from frontier.spark import crawl
-    from frontier.spark.snapshots import SnapshotStore
-
-    seeds = synth.seeds_from_documents(spark, sf_dir).cache()
-    robots = synth.robots_df(spark).cache()
-    budget, rounds = 3, 2
-
-    pages = spark.read.parquet(pages_dir)
-    page_index = crawl.prepare_page_index(pages).cache()
-
-    store = SnapshotStore(str(tmp_path_factory.mktemp("batch_sp")))
-    crawl.crawl(spark, page_index, seeds, robots, store,
-                budget_per_host=budget, max_rounds=rounds,
-                num_buckets=8)
-    want = {(r.url_canon, r.text, r.round) for r in
-            crawl.collect_results(spark, store).collect()}
-
-    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
-    work = str(tmp_path_factory.mktemp("stream_sp"))
-    stats = streaming.streaming_crawl(
-        spark, page_index, seeds, robots, budget, work,
-        max_rounds=rounds, state_partitions=4)
-    got = {(r.url_canon, r.text, r.round) for r in
-           spark.read.parquet(os.path.join(work, "results"))
-           .collect()}
-    assert stats["rounds"] == rounds
-    assert got == want and len(got) > 0
-    # the checkpoint froze exactly 4 state partitions for operator 0
-    state_root = os.path.join(work, "ckpt", "state", "0")
-    parts = sorted(int(d) for d in os.listdir(state_root)
-                   if d.isdigit())
-    assert parts == [0, 1, 2, 3]
-    # the narrowed width never leaks back into the session
-    assert spark.conf.get(
-        "spark.sql.shuffle.partitions") == shuffle_before
-
-
-def test_streaming_crawl_incremental_robots_and_sitemaps(
-        spark, sf_dir, pages_dir, tmp_path_factory):
-    """r6: the streaming loop with BOTH continuous-ingestion sources
-    — sitemap seed offers and in-loop incremental robots acquisition
-    (robots_docs=…) — must equal the batch crawl run with the same
-    sources, INCLUDING across a restart mid-acquisition (stop after
-    2 rounds, resume to the full horizon: the robots_rules state
-    table must carry the acquired knowledge over). The state table
-    must hold each host at most once and only the touched subset."""
-    from frontier.spark import crawl, schedule, sitemaps
-    from frontier.spark.snapshots import SnapshotStore
-
-    seeds = synth.seeds_from_documents(spark, sf_dir).cache()
-    robots_txt = synth.robots_txt_df(spark).cache()
-    offer_rows = sitemaps.discover_offers(
-        robots_txt, synth.sitemap_docs_df(spark, sf_dir)).collect()
-    sitemaps.release_checkpoints()
-    offers_df = spark.createDataFrame(
-        offer_rows, "url_canon string, priority int, warc_ts timestamp")
-    budget, horizon = 3, 3
-
-    pages = spark.read.parquet(pages_dir)
-    page_index = crawl.prepare_page_index(pages).cache()
-
-    store = SnapshotStore(str(tmp_path_factory.mktemp("batch_ir")))
-    crawl.crawl(spark, page_index, seeds, None, store,
-                budget_per_host=budget, max_rounds=horizon,
-                num_buckets=8, robots_docs=robots_txt,
-                sitemap_offers=offers_df)
-    want = {(r.url_canon, r.text, r.round) for r in
-            crawl.collect_results(spark, store).collect()}
-
-    work = str(tmp_path_factory.mktemp("stream_ir"))
-    first = streaming.streaming_crawl(
-        spark, page_index, seeds, None, budget, work, max_rounds=2,
-        robots_docs=robots_txt, sitemap_offers=offers_df)
-    assert first["rounds"] == 2
-    second = streaming.streaming_crawl(
-        spark, page_index, seeds, None, budget, work,
-        max_rounds=horizon, robots_docs=robots_txt,
-        sitemap_offers=offers_df)
-    got = {(r.url_canon, r.text, r.round) for r in
-           spark.read.parquet(os.path.join(work, "results"))
-           .collect()}
-    assert got == want and len(got) > 0
-    assert all(b >= 2 for b in second["scheduled_per_round"])
-
-    rules = spark.read.schema(schedule.ROBOTS_DDL) \
-        .parquet(os.path.join(work, "robots_rules")).collect()
-    hosts = [r.host for r in rules]
-    assert len(hosts) == len(set(hosts)), "host re-acquired"
-    assert 0 < len(hosts) < 1000, "must be only the touched hosts"
 
 
 def _write_doc_file(docs_pdf, path):
@@ -548,52 +317,6 @@ def test_streaming_curate_paragraph_gate_equals_batch(
     assert footer_ids[0] in flipped
     model.unpersist()
     eval_docs.unpersist()
-
-
-def test_streaming_crawl_window_ms_equals_batch(
-        spark, sf_dir, pages_dir, tmp_path_factory):
-    """r6: Crawl-delay budgets in the STREAMING loop — streaming_crawl
-    (window_ms=500) must reproduce crawl(window_ms=500) exactly: the
-    per-host cap rides the offer files into the state store (the
-    long-lived plan never joins robots), and the cap provably bites
-    (fewer results than an uncapped streaming run)."""
-    from frontier.spark import crawl
-    from frontier.spark.snapshots import SnapshotStore
-
-    seeds = synth.seeds_from_documents(spark, sf_dir).cache()
-    robots = synth.robots_df(spark).cache()
-    budget, rounds, window_ms = 3, 3, 500
-
-    pages = spark.read.parquet(pages_dir)
-    page_index = crawl.prepare_page_index(pages).cache()
-
-    store = SnapshotStore(str(tmp_path_factory.mktemp("batch_w")))
-    crawl.crawl(spark, page_index, seeds, robots, store,
-                budget_per_host=budget, max_rounds=rounds,
-                num_buckets=8, window_ms=window_ms)
-    want = {(r.url_canon, r.text, r.round) for r in
-            crawl.collect_results(spark, store).collect()}
-
-    work = str(tmp_path_factory.mktemp("stream_w"))
-    stats = streaming.streaming_crawl(
-        spark, page_index, seeds, robots, budget, work,
-        max_rounds=rounds, window_ms=window_ms)
-    got = {(r.url_canon, r.text, r.round) for r in
-           spark.read.parquet(os.path.join(work, "results"))
-           .collect()}
-    assert got == want and len(got) > 0
-
-    # the cap must actually bite vs an uncapped streaming run
-    work_u = str(tmp_path_factory.mktemp("stream_wu"))
-    streaming.streaming_crawl(
-        spark, page_index, seeds, robots, budget, work_u,
-        max_rounds=rounds)
-    uncapped = {(r.url_canon, r.round) for r in
-                spark.read.parquet(os.path.join(work_u, "results"))
-                .select("url_canon", "round").collect()}
-    capped = {(u, rd) for u, _t, rd in got}
-    assert capped != uncapped
-    assert stats["rounds"] == rounds
 
 
 def test_streaming_curate_shingle_index_equals_batch(

@@ -67,20 +67,56 @@ def _pair_cos(va_col, vb_col):
     path."""
     @pandas_udf("double")
     def pair_cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        a = np.floor(np.asarray(va.tolist(), dtype=np.float64)
-                     * IVF_QUANT)
-        b = np.floor(np.asarray(vb.tolist(), dtype=np.float64)
-                     * IVF_QUANT)
-        if len(va) == 0:
-            return pd.Series([], dtype=np.float64)
-        # zero-dim rows: every einsum is 0, so 0/0 scores NaN
-        dots = np.einsum("ij,ij->i", a, b)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = dots / (np.sqrt(np.einsum("ij,ij->i", a, a))
-                          * np.sqrt(np.einsum("ij,ij->i", b, b)))
-        return pd.Series(out)
+        return _score_pairs(va, vb, _cos_quantized)
 
     return pair_cos(va_col, vb_col)
+
+
+def _cos_quantized(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    a = np.floor(a * IVF_QUANT)
+    b = np.floor(b * IVF_QUANT)
+    # zero-dim rows: every einsum is 0, so 0/0 scores NaN
+    dots = np.einsum("ij,ij->i", a, b)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dots / (np.sqrt(np.einsum("ij,ij->i", a, a))
+                       * np.sqrt(np.einsum("ij,ij->i", b, b)))
+
+
+def _cos_left_fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    if a.shape[1] == 0:  # zero-dim rows: no direction, 0/0
+        return np.full(len(a), np.nan)
+    dots = np.add.accumulate(a * b, axis=1)[:, -1]
+    na = np.sqrt(np.add.accumulate(a * a, axis=1)[:, -1])
+    nb = np.sqrt(np.add.accumulate(b * b, axis=1)[:, -1])
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dots / (na * nb)
+
+
+def _score_pairs(va: pd.Series, vb: pd.Series, kernel) -> pd.Series:
+    """``kernel(a, b)`` over one Arrow batch of vector pairs, where
+    ``a``/``b`` are (n, d) float64 matrices. A batch of non-null
+    vectors of one dimension is stacked whole (the fast path). A
+    ragged batch, or one with null vectors, is scored per dimension
+    group; a row with a null vector or with vectors of different
+    lengths scores NaN, which Arrow hands to Spark as NULL — the same
+    as a zero-dim row."""
+    la, lb = va.tolist(), vb.tolist()
+    try:
+        a = np.asarray(la, dtype=np.float64)
+        b = np.asarray(lb, dtype=np.float64)
+        if a.ndim == 2 and a.shape == b.shape:
+            return pd.Series(kernel(a, b))
+    except ValueError:  # ragged: numpy's "inhomogeneous shape"
+        pass
+    dims = np.array([len(x) if x is not None and y is not None
+                     and len(x) == len(y) else -1
+                     for x, y in zip(la, lb)], dtype=np.int64)
+    out = np.full(len(dims), np.nan)
+    for d in np.unique(dims[dims >= 0]):
+        rows = np.flatnonzero(dims == d)
+        out[rows] = kernel(np.asarray([la[i] for i in rows], np.float64),
+                           np.asarray([lb[i] for i in rows], np.float64))
+    return pd.Series(out)
 
 
 def _pair_cos_raw(va_col, vb_col):
@@ -101,18 +137,7 @@ def _pair_cos_raw(va_col, vb_col):
     restatement keeps matching bit-for-bit."""
     @pandas_udf("double")
     def pair_cos_raw(va: pd.Series, vb: pd.Series) -> pd.Series:
-        a = np.asarray(va.tolist(), dtype=np.float64)
-        b = np.asarray(vb.tolist(), dtype=np.float64)
-        if len(va) == 0:
-            return pd.Series([], dtype=np.float64)
-        if a.shape[1] == 0:  # zero-dim rows: no direction, 0/0
-            return pd.Series(np.full(len(va), np.nan))
-        dots = np.add.accumulate(a * b, axis=1)[:, -1]
-        na = np.sqrt(np.add.accumulate(a * a, axis=1)[:, -1])
-        nb = np.sqrt(np.add.accumulate(b * b, axis=1)[:, -1])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = dots / (na * nb)
-        return pd.Series(out)
+        return _score_pairs(va, vb, _cos_left_fold)
 
     return pair_cos_raw(va_col, vb_col)
 

@@ -19,7 +19,10 @@ Batch-iterative BFS with per-round Iceberg-style snapshot commits
 4. discovery — outbound links, canonicalized, priority = parent+1,
    merged min-(priority, warc_ts) per new URL (deterministic at any
    parallelism; mirrored by frontier.kernel.simulator)
-5. seen-set update — partitioned Bloom ∪ batch, exact table appended;
+5. seen-set update — partitioned Bloom ∪ batch in ONE grouped pass
+   (seen.update), checkpointed once and read by both the unseen probe
+   and the commit; discoveries are probed once and confirmed by one
+   conditional anti-join (seen.filter_unseen); exact table appended.
    Bloom saturation is tracked per round and the filter is REBUILT
    from the exact relation (at doubled width) when the estimated FPP
    exceeds ``target_fpp`` — without this, fixed-width merges degrade
@@ -226,7 +229,6 @@ def crawl(spark: SparkSession, page_index: DataFrame, seeds: DataFrame,
         if incremental:
             robots = store.read(spark, "robots_rules")
         start_round = latest["metrics"]["round"] + 1
-        have_bloom = True
         # recover saturation state from the manifest (resume contract)
         bloom_bits = int(latest["metrics"].get("bloom_m_bits",
                                                bloom_bits))
@@ -252,7 +254,6 @@ def crawl(spark: SparkSession, page_index: DataFrame, seeds: DataFrame,
         seen_exact = spark.createDataFrame([], "url_canon string")
         seen_bloom = spark.createDataFrame([], seenmod.BLOOM_DDL)
         start_round = 0
-        have_bloom = False
     # blocked rows not yet in any snapshot (seed-time gating on a
     # fresh start) — they ride the next round's append delta
     blocked_pending = blocked if latest is None \
@@ -275,7 +276,7 @@ def crawl(spark: SparkSession, page_index: DataFrame, seeds: DataFrame,
             stop = _crawl_round(
                 spark, round_no, frontier, robots, page_index, store,
                 budget_per_host, num_buckets, bloom_bits, rebuild_bloom,
-                have_bloom, seen_exact, seen_bloom, blocked,
+                seen_exact, seen_bloom, blocked,
                 blocked_pending, broadcast_fetch_max, target_fpp,
                 window_ms, robots_docs, robots_pending)
         finally:
@@ -299,7 +300,6 @@ def crawl(spark: SparkSession, page_index: DataFrame, seeds: DataFrame,
         if incremental:
             robots = store.read(spark, "robots_rules")
             robots_pending = spark.createDataFrame([], sched.ROBOTS_DDL)
-        have_bloom = True
 
     _release_ckpts()  # zero-round call: free the seed-gate checkpoint
     return store.manifest() or {}
@@ -374,7 +374,7 @@ def _acquire_robots(known: DataFrame, offers_with_host: DataFrame,
 
 def _crawl_round(spark, round_no, frontier, robots, page_index, store,
                  budget_per_host, num_buckets, bloom_bits, rebuild_bloom,
-                 have_bloom, seen_exact, seen_bloom, blocked,
+                 seen_exact, seen_bloom, blocked,
                  blocked_pending, broadcast_fetch_max, target_fpp,
                  window_ms=None, robots_docs=None,
                  robots_pending=None) -> bool:
@@ -392,7 +392,7 @@ def _crawl_round(spark, round_no, frontier, robots, page_index, store,
 
     # 2. politeness budget (skew-safe two-phase top-k). Checkpointed:
     # the batch feeds the fetch join, the leftover anti-join, the
-    # seen update AND the bloom build — without it each consumer
+    # seen append AND the bloom update — without it each consumer
     # recomputes the window chain. Its count is the ONE pre-commit
     # action per round (empty-check + metric in one).
     # window_ms: the robots Crawl-delay caps each host's budget at
@@ -446,11 +446,14 @@ def _crawl_round(spark, round_no, frontier, robots, page_index, store,
                       F.col("page_ts").alias("warc_ts"))).alias("o"))
                   .select("url_canon", "o.priority", "o.warc_ts"))
 
-    # 5. seen update + unseen filter. When the previous round
-    # estimated the Bloom past target_fpp, REBUILD from the exact
-    # relation at doubled width instead of merging (merging
-    # different widths is meaningless — positions use different
-    # moduli).
+    # 5. seen update + unseen filter. ONE grouped pass writes the
+    # round's filter (seen.update: the batch's keys cogroup with the
+    # old filter rows on bucket) and it is checkpointed, so the probe
+    # and the seen_bloom commit write read the same blocks instead of
+    # each re-running the update. When the previous round estimated
+    # the Bloom past target_fpp, the filter is REBUILT from the exact
+    # relation at doubled width instead (merging different widths is
+    # meaningless — positions use different moduli).
     #
     # Disjointness invariant (round-4, enables the append-only seen
     # table): every frontier row is unseen by construction
@@ -462,16 +465,12 @@ def _crawl_round(spark, round_no, frontier, robots, page_index, store,
     # snapshot commits only the batch DELTA (Iceberg append).
     new_seen = seen_exact.unionByName(batch.select("url_canon"))
     if rebuild_bloom:
-        bloom_bits *= 2
-        new_bloom = seenmod.build(new_seen, num_buckets=num_buckets,
-                                  bits_per_bucket=bloom_bits)
-        rebuild_bloom = False
+        new_bloom = _ckpt(seenmod.build(new_seen, num_buckets=num_buckets,
+                                        bits_per_bucket=bloom_bits * 2))
     else:
-        batch_bloom = seenmod.build(batch.select("url_canon"),
-                                    num_buckets=num_buckets,
-                                    bits_per_bucket=bloom_bits)
-        new_bloom = seenmod.merge_blooms(seen_bloom, batch_bloom) \
-            if have_bloom else batch_bloom
+        new_bloom = _ckpt(seenmod.update(
+            seen_bloom, batch.select("url_canon"),
+            num_buckets=num_buckets, bits_per_bucket=bloom_bits))
 
     fresh = seenmod.filter_unseen(candidates, new_bloom, new_seen,
                                   num_buckets=num_buckets)

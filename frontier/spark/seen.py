@@ -8,8 +8,11 @@ scaled design is a *partitioned* Bloom filter relation::
 
 * ``bucket = pmod(xxhash64(url_canon), num_buckets)`` — computed
   JVM-side (whole-stage codegen), so Python never hashes strings.
-* per-bucket bit arrays are numpy ``uint8`` vectors built/probed with
-  ``applyInPandas`` grouped on ``bucket`` — pure vectorized bit math.
+* per-bucket bit arrays are numpy ``uint8`` vectors written by ONE
+  grouped pass (:func:`update`: the batch's keys cogroup with the old
+  filter rows on ``bucket``; :func:`build` is ``update`` of an empty
+  relation) and probed by one cogroup (:func:`probe`) — pure
+  vectorized bit math.
 * k hash positions come from double hashing (Kirsch-Mitzenmacher):
   ``pos_i = (h1 + i*h2) mod m`` with ``h1 = xxhash64(url)``,
   ``h2 = xxhash64(url, salt)`` — both JVM-side columns.
@@ -20,9 +23,10 @@ of filter across ``num_buckets`` rows; with 4096 buckets each blob is
 ``np.bitwise_or``. Locally we default to 64 buckets.
 
 Correctness contract: the Bloom is a PRE-filter. "definitely new" URLs
-skip the expensive exact check; "maybe seen" URLs are confirmed with an
-exact ``left_anti`` join against the seen-urls relation, so a false
-positive can never drop a URL (SURVEY.md §7.2).
+never match the exact check; "maybe seen" URLs are confirmed by the
+same single ``left_anti`` join against the seen-urls relation (its
+condition carries ``maybe_seen``), so a false positive can never drop
+a URL (SURVEY.md §7.2).
 
 Spark's own ``bloom_filter_agg`` / ``might_contain`` are not SQL
 registered in PySpark 4.1.2 (verified in-sandbox) and the north_rule
@@ -67,10 +71,32 @@ def build(urls: DataFrame, url_col: str = "url_canon",
           bits_per_bucket: int | None = None,
           expected_keys_per_bucket: int = 200_000,
           k: int = DEFAULT_K) -> DataFrame:
-    """URLs → seen_bloom(bucket, bloom, n_keys), one row per bucket."""
+    """URLs → seen_bloom(bucket, bloom, n_keys), one row per bucket:
+    :func:`update` of an empty relation, so one kernel writes every
+    filter."""
     if bits_per_bucket is None:
         bits_per_bucket = expected_keys_per_bucket * DEFAULT_BITS_PER_KEY
-    # probe() recovers m_bits as len(blob)*8, so build must take
+    empty = urls.sparkSession.createDataFrame([], BLOOM_DDL)
+    return update(empty, urls, url_col, num_buckets, bits_per_bucket, k)
+
+
+def update(seen_bloom: DataFrame, urls: DataFrame,
+           url_col: str = "url_canon",
+           num_buckets: int = DEFAULT_NUM_BUCKETS,
+           bits_per_bucket: int = DEFAULT_BITS_PER_KEY * 200_000,
+           k: int = DEFAULT_K) -> DataFrame:
+    """``seen_bloom`` ∪ ``urls`` in ONE grouped pass: the hashed new
+    keys cogroup with the old filter rows on ``bucket``; each group
+    ORs its new positions into a copy of the old bits (zeros for a
+    bucket with no old row) and counts ``n_keys = old + new``. Equal,
+    byte for byte, to ``merge_blooms(seen_bloom, build(urls))``
+    without materializing the batch filter in between.
+
+    Old blobs must be ``bits_per_bucket`` wide (rounded up to whole
+    bytes): positions taken modulo another width are meaningless, so
+    a mismatch raises ``ValueError`` instead of silently corrupting
+    the filter."""
+    # probe() recovers m_bits as len(blob)*8, so the update must take
     # positions modulo a multiple of 8 — otherwise the two moduli
     # disagree and the filter gains FALSE NEGATIVES (seen URLs
     # re-entering the frontier), breaking the pre-filter contract.
@@ -80,23 +106,38 @@ def build(urls: DataFrame, url_col: str = "url_canon",
     hashed = with_hash_cols(urls.select(url_col).dropDuplicates([url_col]),
                             url_col, num_buckets)
 
-    def make_filter(pdf: pd.DataFrame) -> pd.DataFrame:
+    def make_filter(new_pdf: pd.DataFrame, old_pdf: pd.DataFrame
+                    ) -> pd.DataFrame:
         bits = np.zeros(m_bytes, dtype=np.uint8)
-        pos = _positions(pdf["h1"].to_numpy(), pdf["h2"].to_numpy(),
-                         k, m_bits).ravel()
+        n_keys = len(new_pdf)
+        for blob, n in zip(old_pdf["bloom"], old_pdf["n_keys"]):
+            if len(blob) != m_bytes:
+                raise ValueError(
+                    f"bloom width {len(blob) * 8} bits != "
+                    f"bits_per_bucket {m_bits}")
+            np.bitwise_or(bits, np.frombuffer(blob, dtype=np.uint8),
+                          out=bits)
+            n_keys += int(n)
+        pos = _positions(new_pdf["h1"].to_numpy(),
+                         new_pdf["h2"].to_numpy(), k, m_bits).ravel()
         np.bitwise_or.at(bits, (pos >> np.uint64(3)).astype(np.int64),
                          (np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)))
+        side = new_pdf if len(new_pdf) else old_pdf
         return pd.DataFrame({
-            "bucket": [int(pdf["bucket"].iloc[0])],
+            "bucket": [int(side["bucket"].iloc[0])],
             "bloom": [bits.tobytes()],
-            "n_keys": [len(pdf)],
+            "n_keys": [n_keys],
         })
 
-    return hashed.groupBy("bucket").applyInPandas(make_filter, BLOOM_DDL)
+    return (hashed.groupBy("bucket")
+            .cogroup(seen_bloom.groupBy("bucket"))
+            .applyInPandas(make_filter, BLOOM_DDL))
 
 
 def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Union two bloom relations bucket-wise (bitwise OR)."""
+    """Union two bloom relations bucket-wise (bitwise OR). Adding a
+    batch of URLs to a filter is :func:`update`, one pass with the
+    same result as ``merge_blooms(old, build(batch))``."""
     both = a.unionByName(b)
 
     def orr(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -258,26 +299,30 @@ def filter_unseen(candidates: DataFrame, seen_bloom: DataFrame,
                   seen_exact: DataFrame | None = None,
                   url_col: str = "url_canon",
                   num_buckets: int = DEFAULT_NUM_BUCKETS) -> DataFrame:
-    """The full anti-join: Bloom pre-filter + exact confirm.
+    """The full anti-join: ONE Bloom probe + exact confirm.
+
+    Candidates are probed once (:func:`probe`, the cogroup numpy
+    kernel: it touches each bucket's filter once per Arrow batch),
+    then go through one conditional anti-join::
+
+        tagged LEFT ANTI seen_exact ON url_canon = url AND maybe_seen
 
     * ``maybe_seen = False`` → definitely new (Bloom has no false
-      negatives) — passes through with NO exact-join cost.
-    * ``maybe_seen = True`` → confirmed against ``seen_exact`` with a
-      ``left_anti`` join; survivors are Bloom false positives.
+      negatives): the condition fails, so the row survives without
+      matching ``seen_exact``.
+    * ``maybe_seen = True`` → dropped only on an exact match;
+      survivors are Bloom false positives.
 
-    At 10^10 scale the exact join touches only FPP≈1% of candidates —
-    that is the whole point of the partitioned Bloom. The membership
-    test is the cogroup numpy kernel (:func:`probe`): it touches each
-    bucket's filter once per Arrow batch.
+    An anti-join needs no distinct right side, so ``seen_exact`` is
+    not deduplicated first. ``seen_exact=None`` keeps only the rows
+    the Bloom calls definitely new.
     """
-    tagged = probe(candidates, seen_bloom, url_col, num_buckets)
-    fresh = tagged.where(~F.col("maybe_seen")).drop("maybe_seen", "h1",
-                                                    "h2", "bucket")
+    tagged = probe(candidates, seen_bloom, url_col, num_buckets) \
+        .drop("h1", "h2", "bucket")
     if seen_exact is None:
-        return fresh
-    suspects = tagged.where(F.col("maybe_seen")).drop("maybe_seen", "h1",
-                                                      "h2", "bucket")
-    confirmed_new = suspects.join(
-        seen_exact.select(F.col(url_col)).dropDuplicates([url_col]),
-        url_col, "left_anti")
-    return fresh.unionByName(confirmed_new)
+        return tagged.where(~F.col("maybe_seen")).drop("maybe_seen")
+    exact = seen_exact.select(F.col(url_col).alias("_seen_url"))
+    return tagged.join(
+        exact,
+        (tagged[url_col] == exact["_seen_url"]) & tagged["maybe_seen"],
+        "left_anti").drop("maybe_seen")

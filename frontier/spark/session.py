@@ -12,6 +12,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_mem() -> str:
+    """Driver heap default: half the host's physical memory, capped at
+    48g. In local mode the driver JVM is the whole engine, so a heap
+    larger than the host lets it grow until the OS kills it (a fixed
+    48g did exactly that on a 16 GB host). ``$FRONTIER_DRIVER_MEM``
+    overrides it."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(48 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(app: str = "frontier",
               cores: int | None = None,
               shuffle_partitions: int | None = None,
@@ -33,7 +43,7 @@ def get_spark(app: str = "frontier",
         # host-skewed shuffles: let AQE split oversized partitions
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.driver.memory", os.environ.get("FRONTIER_DRIVER_MEM",
-                                                      "48g"))
+                                                      default_driver_mem()))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # pages carry KB-scale MHTML blobs here (real crawls: set lower

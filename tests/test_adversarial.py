@@ -221,3 +221,19 @@ def test_terminator_with_trailing_junk_terminates():
     assert len(parts) == 1
     phdr, start, cstart, end = parts[0]
     assert doc[cstart:end].startswith(b"hello")
+
+
+def test_default_driver_heap_fits_host(monkeypatch):
+    """The default driver heap is half the host's memory, capped at
+    48g: a fixed 48g let the one local JVM outgrow a 16 GB host."""
+    import os
+
+    from frontier.spark import session
+
+    def host(gib):
+        pages = {"SC_PHYS_PAGES": gib << 18, "SC_PAGE_SIZE": 4096}
+        monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+        return session.default_driver_mem()
+
+    assert host(16) == "8192m"
+    assert host(1024) == "49152m"

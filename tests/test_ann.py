@@ -455,3 +455,26 @@ def test_pair_cos_zero_dim_vectors_score_null(spark):
         ann._pair_cos_raw(F.col("va"), F.col("vb")).alias("raw"),
     ).orderBy("pid").collect()
     assert [tuple(r) for r in got] == [(0, None, None), (1, None, None)]
+
+
+def test_pair_cos_ragged_and_null_vectors_score_null(spark):
+    """One Arrow batch mixing dimensions, a null vector and a pair of
+    different lengths: both cosine kernels score the well-formed rows
+    as usual and the null or mismatched rows NULL, instead of failing
+    the query with numpy's inhomogeneous-shape error."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0], [1.0, 0.0]),
+         (1, [1.0, 0.0, 0.0], [0.0, 1.0, 0.0]),
+         (2, None, [1.0]),
+         (3, [1.0, 2.0], [1.0]),
+         (4, [3.0, 4.0], [3.0, 4.0]),
+         (5, [], [])],
+        "pid long, va array<double>, vb array<double>").coalesce(1)
+    got = df.select(
+        "pid",
+        ann._pair_cos(F.col("va"), F.col("vb")).alias("quant"),
+        ann._pair_cos_raw(F.col("va"), F.col("vb")).alias("raw"),
+    ).orderBy("pid").collect()
+    want = [(0, 1.0, 1.0), (1, 0.0, 0.0), (2, None, None),
+            (3, None, None), (4, 1.0, 1.0), (5, None, None)]
+    assert [tuple(r) for r in got] == want

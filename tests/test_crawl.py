@@ -143,6 +143,25 @@ def test_lineage_and_metrics_recorded(spark_run):
     assert manifest["parent_id"] == manifest["snapshot_id"] - 1
 
 
+def test_committed_bloom_equals_build_of_seen(spark, spark_run):
+    """Without a rebuild, the per-round filter updates commit exactly
+    the filter one build over the whole seen set writes at the same
+    width: byte for byte, n_keys included."""
+    from frontier.spark import seen as seenmod
+
+    store, manifest = spark_run
+    mans = [store.manifest(sid) for sid in store.snapshot_ids()]
+    assert len(mans) >= 3
+    assert not any(m["metrics"]["bloom_rebuild_next"] for m in mans[:-1])
+
+    def blooms(df):
+        return {r.bucket: (bytes(r.bloom), r.n_keys) for r in df.collect()}
+
+    want = seenmod.build(store.read(spark, "seen_exact"), num_buckets=8,
+                         bits_per_bucket=manifest["metrics"]["bloom_m_bits"])
+    assert blooms(store.read(spark, "seen_bloom")) == blooms(want)
+
+
 def test_robots_blocked_never_fetched(spark, spark_run, corpus):
     store, _ = spark_run
     _, _, _, robots = corpus

@@ -116,3 +116,53 @@ def test_filter_unseen_exact_confirm_rescues_false_positives(spark):
         cands, bloom, inserted, num_buckets=BUCKETS).collect()]
     # exact confirm rescues every false positive: unseen = 200..599
     assert sorted(out) == sorted(unseen)
+
+
+def _blooms(df):
+    return {r.bucket: (bytes(r.bloom), r.n_keys) for r in df.collect()}
+
+
+def test_update_equals_merge_of_build(spark, urls, other_urls):
+    """One update pass == merge_blooms(old, build(batch)), byte for
+    byte with the same n_keys: buckets only on the old side pass
+    through, buckets only on the new side start from zeros, shared
+    buckets OR; an empty old relation gives build(batch)."""
+    kw = dict(num_buckets=BUCKETS, bits_per_bucket=4096)
+    hashed = seen.with_hash_cols(urls.unionByName(other_urls),
+                                 num_buckets=BUCKETS)
+    old_urls = hashed.where(F.col("bucket") < 4).select("url_canon")
+    new_urls = hashed.where(F.col("bucket") >= 2).select("url_canon")
+    old = seen.build(old_urls, **kw)
+    want = _blooms(seen.merge_blooms(old, seen.build(new_urls, **kw)))
+    got = _blooms(seen.update(old, new_urls, **kw))
+    assert got == want
+    old_side = set(_blooms(old))
+    new_side = set(_blooms(seen.build(new_urls, **kw)))
+    assert old_side - new_side and new_side - old_side \
+        and old_side & new_side
+    empty = spark.createDataFrame([], seen.BLOOM_DDL)
+    assert _blooms(seen.update(empty, new_urls, **kw)) \
+        == _blooms(seen.build(new_urls, **kw))
+
+
+def test_update_rejects_width_mismatch(spark, urls):
+    old = seen.build(urls, num_buckets=BUCKETS, bits_per_bucket=4096)
+    with pytest.raises(Exception, match="bloom width 4096 bits"):
+        seen.update(old, urls, num_buckets=BUCKETS,
+                    bits_per_bucket=8192).collect()
+
+
+def test_filter_unseen_probes_once(spark, urls, other_urls):
+    """The Bloom probe runs once per call: one conditional anti-join
+    instead of a union of a fresh branch and a suspects branch, each
+    re-running the probe cogroup."""
+    # a materialized filter, so the only cogroup left is the probe
+    bloom = seen.build(urls, num_buckets=BUCKETS,
+                       expected_keys_per_bucket=1000).localCheckpoint()
+    out = seen.filter_unseen(urls.unionByName(other_urls), bloom,
+                             seen_exact=urls, num_buckets=BUCKETS)
+    assert len(out.collect()) == other_urls.count()
+    # the adaptive plan's final physical plan, after execution
+    plan = out._jdf.queryExecution().executedPlan() \
+        .executedPlan().toString()
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan

@@ -75,8 +75,7 @@ def main():
     with_url_canon(warm).count()
 
     n_base = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    amplify = int(os.environ.get("FRONTIER_BENCH_AMPLIFY",
-                                 str(max(1, 50_000 // n_base))))
+    amplify = max(1, 50_000 // n_base)
     n_docs = n_base * amplify
 
     # materialize the pages table once (the metric's input is a stored
@@ -181,43 +180,40 @@ def main():
           lambda: parse.extract_main_text(pages_cached)
           .where(F.col("text").isNotNull()).count())
 
-    if not os.environ.get("FRONTIER_BENCH_HEADLINE_ONLY"):
-        qs = entrymod.queries()
+    qs = entrymod.queries()
 
-        # noop sink, not count(): count() lets Catalyst PRUNE the
-        # projected columns of map-only queries (minhash_sig,
-        # token_stats, simhash...), silently benchmarking just the
-        # scan. noop evaluates every output column.
-        def run_query(n):
-            qs[n](spark, sf_dir).write.format("noop") \
-                .mode("overwrite").save()
+    # noop sink, not count(): count() lets Catalyst PRUNE the
+    # projected columns of map-only queries (minhash_sig,
+    # token_stats, simhash...), silently benchmarking just the
+    # scan. noop evaluates every output column.
+    def run_query(n):
+        qs[n](spark, sf_dir).write.format("noop") \
+            .mode("overwrite").save()
 
-        for name in ("seen_antijoin", "pricing_summary", "top_revenue",
-                     "first_wins_dedup", "politeness_topk", "minhash_sig",
-                     "lsh_jaccard", "ann_approx_topk", "doc_hashes",
-                     "text_stats",
-                     "gopher_quality", "tfidf_top_terms",
-                     "decontam_overlap", "unigram_logprob",
-                     "training_mix", "events_asof",
-                     "events_range_count", "paragraph_dedup",
-                     "semantic_dedup", "substring_dedup"):
-            # two runs each: min → `queries`, both → `spread`
-            timed(name, lambda n=name: run_query(n))
-            timed(name, lambda n=name: run_query(n))
+    for name in ("seen_antijoin", "pricing_summary", "top_revenue",
+                 "first_wins_dedup", "politeness_topk", "minhash_sig",
+                 "lsh_jaccard", "ann_approx_topk", "doc_hashes",
+                 "text_stats",
+                 "gopher_quality", "tfidf_top_terms",
+                 "decontam_overlap", "unigram_logprob",
+                 "training_mix", "events_asof",
+                 "events_range_count", "paragraph_dedup",
+                 "semantic_dedup", "substring_dedup"):
+        # two runs each: min → `queries`, both → `spread`
+        timed(name, lambda n=name: run_query(n))
+        timed(name, lambda n=name: run_query(n))
 
-        # free the lazily-checkpointed left relations range_join_count
-        # accumulated (results are consumed by the noop sink above)
-        from frontier.spark import eventops
-        eventops.release_checkpoints()
+    # free the lazily-checkpointed left relations range_join_count
+    # accumulated (results are consumed by the noop sink above)
+    from frontier.spark import eventops
+    eventops.release_checkpoints()
 
-        # per-run ANN recall@k of each approximate arm vs the exact
-        # verifier (r5 VERDICT item 7) — read from the same tagged
-        # union the timed query produced; bounded driver-side eval
-        from frontier.spark import ann
-        ann_recall = ann.recall_at_k(
-            qs["ann_approx_topk"](spark, sf_dir))
-    else:
-        ann_recall = {}
+    # per-run ANN recall@k of each approximate arm vs the exact
+    # verifier (r5 VERDICT item 7) — read from the same tagged
+    # union the timed query produced; bounded driver-side eval
+    from frontier.spark import ann
+    ann_recall = ann.recall_at_k(
+        qs["ann_approx_topk"](spark, sf_dir))
 
     total = round(sum(timings.values()), 3)
     throughput = round(n_docs / timings["frontier_schedule_parse"], 1)
@@ -250,20 +246,10 @@ def main():
         "n_pages": n_docs,
         "n_scheduled": n_scheduled,
         "urls_per_sec": throughput,
-        # known engine-attributable cost changes, so cross-round
-        # deltas self-explain (r5 VERDICT item 4); details in the
-        # detail line + BENCH/BASELINE.md
-        "notes": "r6: ann re-rank + semdedup prune moved to the "
-                 "quantized numpy scorer (semantic_dedup 5.0->2.0s, "
-                 "ann_approx_topk 3.2->2.8s at sf0.1); "
-                 "substring_dedup is NEW in the timed set (~2.5s — "
-                 "the total grew by a new query, not a regression); "
-                 "unigram_logprob is now per-language (heavier by "
-                 "design); html_clean rides text_stats; "
-                 "frontier_schedule_parse retains the r5 pruned "
-                 "robots gate (~+0.5s measured insurance). Compare "
-                 "cpu_probe_sec to BENCH/BASELINE.md (~0.23s quiet) "
-                 "before reading deltas as regressions.",
+        # how to read cross-run deltas; details in the detail line +
+        # BENCH/BASELINE.md
+        "notes": "Compare cpu_probe_sec to BENCH/BASELINE.md (~0.23s "
+                 "quiet) before reading deltas as regressions.",
     })
     assert len(summary) < 1900, f"summary line {len(summary)}B > driver window"
     print(summary)

@@ -67,8 +67,8 @@ r3 VERDICT item 3 — measured ~15-25 s/round of pure Catalyst work):
   so every downstream plan is a shallow LogicalRDD — ``persist()``
   kept full logical lineage and every consumer re-analyzed it;
 * ``spark.sql.constraintPropagation.enabled=false`` (session.py) —
-  PruneFilters spent 10.6 s/plan deriving constraints with zero
-  effective rewrites (Catalyst rule dump);
+  flat on crawl, and curate's set-up and cold pass run 3-12 % slower
+  with it on (interleaved perfbench runs, 4 cores);
 * snapshot table writes run CONCURRENTLY (snapshots.commit) so one
   write's plan compile overlaps another's execution;
 * cached blocks are freed per round by draining the crawl-private

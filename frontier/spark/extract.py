@@ -1,9 +1,9 @@
 """Extraction pipelines — DataFrame forms of the reference CLIs
 (SURVEY.md §2.6).
 
-* S1 ``mhtml-extract``: every part → (filename, content) rows, with
-  the collision-free rename of U2 done relationally (row_number over
-  identical filenames) instead of filesystem probing.
+* S1 ``mhtml-extract``: the collision-free rename of U2 done
+  relationally (row_number over identical filenames) instead of
+  filesystem probing; ``sources.write_part_files`` writes the files.
 * S4 ``mhtml-headers``: content-type glob filter (fnmatch → SQL LIKE)
   + header/offset projection.
 * S5 ``mhtml-list``: per-part listing with the is-main marker.
@@ -61,13 +61,6 @@ def with_unique_filenames(resources: DataFrame,
     return resources.withColumn(
         "out_filename",
         F.when(dup_idx == 0, F.col("filename")).otherwise(renamed))
-
-
-def extract_all(resources: DataFrame) -> DataFrame:
-    """S1 pipeline: (url, out_filename, content) for every part —
-    the partitioned-parquet analog of file-per-resource output."""
-    return with_unique_filenames(resources).select(
-        "url", "part_index", "out_filename", "content_type", "content")
 
 
 def list_parts(resources: DataFrame) -> DataFrame:

@@ -365,17 +365,6 @@ def discovered_links(resources: DataFrame) -> DataFrame:
                     "content_type"))
 
 
-def main_text_sql(resources: DataFrame) -> DataFrame:
-    """Pure-SQL restatement of the S2 selection over exploded
-    resources (raw bytes, no decode) — used to cross-check the kernel
-    path: part 0, content_location == archive snapshot location."""
-    return (resources
-            .where((F.col("part_index") == 0) &
-                   (F.col("content_location") ==
-                    F.col("snapshot_location")))
-            .select("url", "warc_ts", "lang", "content"))
-
-
 def reassemble(resources: DataFrame, archives: DataFrame) -> DataFrame:
     """Rebuild archive bytes from (possibly edited) resource rows.
 

@@ -53,12 +53,11 @@ def get_spark(app: str = "frontier",
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("FRONTIER_ARROW_BATCH", "1024"))
         .config("spark.ui.enabled", "false")
-        # Constraint propagation is O(expression²) on wide derived-
-        # column projections: PruneFilters alone once spent 10.6 s per
-        # crawl-round plan deriving constraints it never used (0
-        # effective runs, Catalyst rule dump). Disabling is the
-        # documented Spark remedy for large iterative plans; it only
-        # drops inferred-filter optimizations, never changes results.
+        # Constraint propagation only infers extra filters; turning it
+        # off never changes results. Two interleaved A/Bs with it on
+        # (4 cores, perfbench/run.py --trace 0, 2-4 pairs per workload)
+        # found crawl flat and curate slower in both: setup_s +12 % and
+        # +3 %, cold_s +6 % and +3 %.
         .config("spark.sql.constraintPropagation.enabled", "false")
         # 128 MiB parquet split targets — at 100 TB this yields ~800k
         # input tasks, the right granularity for 1000 executors

@@ -1,14 +1,13 @@
-"""Structured Streaming operators and the streaming curate pipeline.
+"""Streaming curation: the curate gates over documents as they arrive.
 
-The crawl loop is batch only: each round is one batch iteration with a
-snapshot commit (``crawl.crawl``), which is also what makes it
-resumable. This module holds the streaming face of the per-page
-operators for continuous-ingestion deployments: new page files land
-in a directory (or a Kafka topic on a real cluster) and main text
-flows out incrementally, with watermarked per-window crawl metrics, a
-stateful per-host rate limiter and a stateful first-seen URL set
-(``applyInPandasWithState``). :func:`streaming_curate` runs the
-curate gates over documents as they arrive.
+The crawl loop is batch only (``crawl.crawl``); streaming is the ingest
+face of curation. Document files land in a directory (or a Kafka topic
+on a real cluster) and :func:`streaming_curate` runs the curate gates
+over them incrementally. :func:`first_seen_docs` is the stateful
+exact-dedup seen-set (``applyInPandasWithState``) across triggers;
+:func:`paragraph_casualties` and :func:`substring_casualty_spans` read
+the corpus-global dedup verdicts back from the incremental indexes the
+stream maintains. ``jobs/curate.py --streaming-in`` drives all of it.
 
 ``trigger(availableNow=True)`` gives exactly-once batch-incremental
 runs, which is what the tests exercise.
@@ -16,124 +15,8 @@ runs, which is what the tests exercise.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from .parse import extract_main_text
-from .schedule import canon_host
-
-PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
-                "text string, lang string")
-
-
-def stream_pages(spark: SparkSession, path: str,
-                 max_files_per_trigger: int | None = None) -> DataFrame:
-    """Directory parquet source of pages (file-arrival streaming)."""
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    return reader.parquet(path)
-
-
-def stream_extract(pages_stream: DataFrame) -> DataFrame:
-    """Incremental main-text extraction — the same Arrow kernel as the
-    batch path (stateless mapInArrow works unchanged on streams)."""
-    return extract_main_text(pages_stream, with_canon=True)
-
-
-def crawl_metrics(texts_stream: DataFrame,
-                  window: str = "10 minutes",
-                  watermark: str = "1 hour") -> DataFrame:
-    """Watermarked windowed crawl metrics: pages + extracted texts per
-    (event-time window, lang); late pages beyond the watermark drop."""
-    return (texts_stream
-            .withWatermark("warc_ts", watermark)
-            .groupBy(F.window("warc_ts", window).alias("w"), "lang")
-            .agg(F.count("*").alias("n_pages"),
-                 F.count("text").alias("n_texts"))
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"),
-                    "lang", "n_pages", "n_texts"))
-
-
-RATE_STATE_DDL = "served bigint"
-RATE_OUT_DDL = ("host string, n_requested bigint, n_allowed bigint, "
-                "served_total bigint")
-
-
-def rate_limited_hosts(texts_stream: DataFrame, budget_per_trigger: int,
-                       host_col: str = "url_canon") -> DataFrame:
-    """Stateful per-host politeness limiter: each host may serve at
-    most ``budget_per_trigger`` pages per trigger; the running served
-    count persists in GroupState across triggers.
-
-    The streaming twin of schedule.politeness_cut — custom state via
-    applyInPandasWithState (the reference has no analog; SURVEY.md
-    §2.7 'Streaming').
-    """
-    hosts = texts_stream.withColumn("host", canon_host(host_col))
-
-    def limiter(key, pdfs, state: GroupState):
-        total = state.get[0] if state.exists else 0
-        n_req = 0
-        for pdf in pdfs:
-            n_req += len(pdf)
-        allowed = min(n_req, budget_per_trigger)
-        total += allowed
-        state.update((total,))
-        yield pd.DataFrame({"host": [key[0]],
-                            "n_requested": [n_req],
-                            "n_allowed": [allowed],
-                            "served_total": [total]})
-
-    # "append" operator mode: each trigger's per-host row is final, and
-    # it keeps the query compatible with file sinks (parquet rejects
-    # update-mode streaming writes)
-    return (hosts.groupBy("host")
-            .applyInPandasWithState(limiter, RATE_OUT_DDL, RATE_STATE_DDL,
-                                    "append",
-                                    GroupStateTimeout.NoTimeout))
-
-
-SEEN_STATE_DDL = "first_ts_us bigint"
-FIRST_SEEN_OUT_DDL = "url_canon string, warc_ts timestamp, text string"
-
-
-def first_seen_texts(texts_stream: DataFrame) -> DataFrame:
-    """Streaming URL-seen set: emit each url_canon's text exactly ONCE
-    across all triggers (first-wins by warc_ts, deterministic) — the
-    stateful-streaming twin of the batch crawl's Bloom+exact
-    anti-join (seen.filter_unseen) and of the reference's merge
-    seen-set (merge.py:30-44).
-
-    State = one bigint per seen url, sharded by Spark's state store
-    (RocksDB on a real cluster): the 10^10-url state lives with the
-    shuffle partitioning, never on one node. Duplicates inside one
-    trigger resolve by min (warc_ts, text) before emission.
-    """
-    def dedup(key, pdfs, state: GroupState):
-        rows = [pdf for pdf in pdfs if len(pdf)]
-        if state.exists or not rows:
-            return  # already emitted in an earlier trigger
-        import pandas as pd2
-        all_rows = pd2.concat(rows, ignore_index=True)
-        all_rows["_ts"] = all_rows["warc_ts"].astype("int64")
-        first = all_rows.sort_values(["_ts", "text"]).iloc[0]
-        state.update((int(first["_ts"]),))
-        yield pd2.DataFrame({"url_canon": [key[0]],
-                             "warc_ts": [first["warc_ts"]],
-                             "text": [first["text"]]})
-
-    return (texts_stream
-            .where(F.col("url_canon").isNotNull())
-            .select("url_canon", "warc_ts", "text")
-            .groupBy("url_canon")
-            .applyInPandasWithState(dedup, FIRST_SEEN_OUT_DDL,
-                                    SEEN_STATE_DDL, "append",
-                                    GroupStateTimeout.NoTimeout))
-
 
 # ---------------------------------------------------------------------------
 # Streaming curation: continuous-ingestion training-data pipeline
@@ -170,9 +53,8 @@ def first_seen_docs(docs_stream: DataFrame) -> DataFrame:
     all null-text docs share the null-key group.
 
     State = one bigint per distinct text, sharded by the state
-    store exactly like first_seen_texts: at 10^10 docs it lives
-    with the shuffle partitioning (RocksDB on a real cluster),
-    never on one node.
+    store: at 10^10 docs it lives with the shuffle partitioning
+    (RocksDB on a real cluster), never on one node.
     """
     def dedup(key, pdfs, state: GroupState):
         rows = [pdf for pdf in pdfs if len(pdf)]

@@ -1,8 +1,9 @@
 """Text-analysis / dedup operators for large-scale training-data
 pipelines over ``documents(doc_id, text, lang, source, n_chars)``.
 
-All hot paths are built-in ``pyspark.sql.functions`` (JVM, codegen) —
-the only pandas UDF is the simhash bit-twiddling kernel. Every
+All hot paths are built-in ``pyspark.sql.functions`` (JVM, codegen);
+Python runs only in Arrow-batched kernels (simhash, decontamination
+overlap, substring shingling and the span rewrite). Every
 operator keyed for the DuckDB oracle uses only hash functions that
 exist identically in both engines (md5/sha256), never xxhash64.
 
@@ -488,10 +489,8 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 50,
 
 
 # ---------------------------------------------------------------------------
-# SimHash (pure JVM: explode tokens → codegen'd per-bit sums)
+# SimHash (batched Arrow kernel)
 # ---------------------------------------------------------------------------
-
-INT64_MIN = -(1 << 63)
 
 
 def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -600,87 +599,6 @@ def doc_signatures(docs: DataFrame, text_col: str = "text"
     return (base
             .withColumn("is_rep", F.row_number().over(w) == 1)
             .drop("_sha"))
-
-
-def simhash_jvm(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Pure-JVM SimHash — zero Python workers. Explode tokens → one
-    JVM ``md5`` per token → 64 codegen'd ``sum((bit<<1)-1)``
-    aggregates grouped by doc (map-side combine: the shuffle carries
-    one 64-long row per doc per partition, ~512 B/doc, never token
-    data).
-
-    Measured at sf0.1 it is ~2× slower than :func:`simhash` (no
-    token dedup; per-occurrence JVM md5 + 64-wide hash-agg update),
-    so it is the fallback for deployments that cannot run Python
-    workers, not the default.
-
-    Token hash = first 8 bytes of md5(token), big-endian — split into
-    two 32-bit lanes (``conv`` of 8 hex chars each) because a full
-    16-hex conv overflows signed BIGINT.
-    """
-    t = F.col(text_col)
-    toks = F.filter(F.split(F.lower(F.trim(t)), r"\s+"),
-                    lambda x: x != "")
-    digest = F.md5(F.col("tok"))
-    lanes = (docs
-             .select("doc_id", F.explode(toks).alias("tok"))
-             .select("doc_id",
-                     F.conv(F.substring(digest, 1, 8), 16, 10)
-                     .cast("bigint").alias("hi"),
-                     F.conv(F.substring(digest, 9, 8), 16, 10)
-                     .cast("bigint").alias("lo")))
-
-    def bit_sign(j: int):
-        lane = F.col("lo") if j < 32 else F.col("hi")
-        bit = F.shiftright(lane, j % 32).bitwiseAND(F.lit(1))
-        return bit * 2 - 1
-
-    acc = lanes.groupBy("doc_id").agg(
-        *[F.sum(bit_sign(j)).alias(f"b{j}") for j in range(64)])
-
-    val = None
-    for j in range(64):
-        term = F.when(F.col(f"b{j}") > 0,
-                      F.lit(INT64_MIN if j == 63 else 1 << j)) \
-            .otherwise(F.lit(0))
-        val = term if val is None else val + term
-
-    # docs with no tokens produce no exploded rows → simhash 0
-    return (docs.select("doc_id")
-            .join(acc, "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce(val, F.lit(0)).cast("long")
-                    .alias("simhash64")))
-
-
-def simhash_pandas(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Round-1 pandas/hashlib kernel, kept as the differential oracle
-    for :func:`simhash` (tests assert identical outputs). NOT a hot
-    path — per-token Python."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def sim64(texts: pd.Series) -> pd.Series:
-        out = np.zeros(len(texts), dtype=np.int64)
-        for i, text in enumerate(texts):
-            if not text:
-                continue
-            acc = np.zeros(64, dtype=np.int64)
-            shifts = np.arange(64, dtype=np.uint64)
-            for tok in text.lower().split():
-                h = np.uint64(int.from_bytes(
-                    hashlib.md5(tok.encode()).digest()[:8], "big"))
-                bits = (h >> shifts) & np.uint64(1)
-                acc += np.where(bits == 1, 1, -1)
-            val = 0
-            for bit_idx in np.nonzero(acc > 0)[0]:
-                val |= 1 << int(bit_idx)
-            if val >= 1 << 63:  # two's-complement into int64
-                val -= 1 << 64
-            out[i] = val
-        return pd.Series(out)
-
-    return docs.select("doc_id", sim64(F.col(text_col)).alias("simhash64"))
 
 
 def simhash_near_pairs(sim: DataFrame, max_hamming: int = 3,

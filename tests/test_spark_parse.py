@@ -88,11 +88,22 @@ def test_parse_pages_offsets_are_provenance(pages, spark):
     assert bad == 0
 
 
+def main_text_sql(resources):
+    """Pure-SQL restatement of the S2 selection over exploded
+    resources (raw bytes, no decode): part 0, content_location ==
+    archive snapshot location."""
+    return (resources
+            .where((F.col("part_index") == 0) &
+                   (F.col("content_location") ==
+                    F.col("snapshot_location")))
+            .select("url", "warc_ts", "lang", "content"))
+
+
 def test_main_text_sql_crosscheck(pages):
     """Pure-SQL S2 selection over exploded resources == kernel path
     (on raw bytes)."""
     res = parse.parse_pages(pages)
-    sql_main = parse.main_text_sql(res).select("url", "content")
+    sql_main = main_text_sql(res).select("url", "content")
     kernel_main = parse.extract_main_text(pages) \
         .where(F.col("text").isNotNull()).select("url")
     assert sql_main.count() == kernel_main.count()

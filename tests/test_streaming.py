@@ -1,133 +1,9 @@
-"""Structured Streaming face of the engine (availableNow triggers)."""
+"""Streaming curation (availableNow triggers) vs the batch curate
+pipeline."""
 
 import pyspark.sql.functions as F
-import pytest
 
-from frontier import synth
 from frontier.spark import streaming
-
-
-@pytest.fixture(scope="module")
-def pages_dir(spark, sf_dir, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("stream_pages"))
-    synth.pages_from_documents(spark, sf_dir) \
-        .write.mode("overwrite").parquet(path)
-    return path
-
-
-def _drain(df, out_path, checkpoint):
-    """Run a streaming DataFrame to parquet in append mode as one
-    availableNow pass, blocking until it is done."""
-    (df.writeStream
-     .outputMode("append")
-     .trigger(availableNow=True)
-     .option("checkpointLocation", checkpoint)
-     .format("parquet")
-     .option("path", out_path)
-     .start()
-     .awaitTermination())
-
-
-def test_stream_extract_matches_batch(spark, sf_dir, pages_dir,
-                                      tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("stream_out"))
-    ckpt = str(tmp_path_factory.mktemp("stream_ckpt"))
-    stream = streaming.stream_extract(
-        streaming.stream_pages(spark, pages_dir))
-    _drain(stream, out, ckpt)
-
-    got = spark.read.parquet(out)
-    batch = spark.read.parquet(pages_dir)
-    assert got.count() == batch.count()
-    joined = got.select("url", F.col("text").alias("stream_text")) \
-        .join(batch.select("url", "text"), "url")
-    mismatch = joined.where(
-        ~((F.col("stream_text") == F.col("text")) |
-          (F.col("stream_text").isNull() & F.col("text").isNull()))
-    ).count()
-    assert mismatch == 0
-
-
-def test_stream_incremental_second_batch(spark, sf_dir, pages_dir,
-                                         tmp_path_factory):
-    """availableNow is exactly-once: a second run with new files only
-    processes the new files."""
-    out = str(tmp_path_factory.mktemp("inc_out"))
-    ckpt = str(tmp_path_factory.mktemp("inc_ckpt"))
-    src = str(tmp_path_factory.mktemp("inc_src"))
-
-    batch = spark.read.parquet(pages_dir)
-    first = batch.limit(100)
-    first.write.mode("append").parquet(src)
-    stream = streaming.stream_extract(streaming.stream_pages(spark, src))
-    _drain(stream, out, ckpt)
-    n1 = spark.read.parquet(out).count()
-
-    batch.limit(150).write.mode("append").parquet(src)
-    stream = streaming.stream_extract(streaming.stream_pages(spark, src))
-    _drain(stream, out, ckpt)
-    n2 = spark.read.parquet(out).count()
-    assert n1 == 100
-    assert n2 == 250  # 100 + 150 appended rows, no reprocessing dups
-
-
-def test_crawl_metrics_watermark(spark, sf_dir, pages_dir,
-                                 tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("met_out"))
-    ckpt = str(tmp_path_factory.mktemp("met_ckpt"))
-    # append-mode windows only emit once the watermark passes them in a
-    # LATER micro-batch — so force several batches (maxFilesPerTrigger)
-    # and keep the watermark shorter than the corpus' event-time span
-    stream = streaming.crawl_metrics(
-        streaming.stream_extract(
-            streaming.stream_pages(spark, pages_dir,
-                                   max_files_per_trigger=2)),
-        window="1 minute", watermark="2 minutes")
-    _drain(stream, out, ckpt)
-    got = spark.read.parquet(out)
-    # 500 pages spread over ~500s → ~9 one-minute windows × langs
-    assert got.count() > 0
-    assert got.agg(F.sum("n_pages")).first()[0] > 0
-
-
-def test_rate_limited_hosts_state(spark, sf_dir, pages_dir,
-                                  tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("rate_out"))
-    ckpt = str(tmp_path_factory.mktemp("rate_ckpt"))
-    stream = streaming.rate_limited_hosts(
-        streaming.stream_extract(streaming.stream_pages(spark, pages_dir)),
-        budget_per_trigger=5)
-    _drain(stream, out, ckpt)
-    got = spark.read.parquet(out)
-    assert got.where(F.col("n_allowed") > 5).count() == 0
-    assert got.where(F.col("n_requested") > F.col("n_allowed")).count() > 0
-
-
-def test_first_seen_texts_exactly_once(spark, sf_dir, pages_dir,
-                                       tmp_path_factory):
-    """Stateful streaming seen-set: a url emitted in trigger 1 is
-    suppressed when the same url arrives again in trigger 2."""
-    out = str(tmp_path_factory.mktemp("seen_out"))
-    ckpt = str(tmp_path_factory.mktemp("seen_ckpt"))
-    src = str(tmp_path_factory.mktemp("seen_src"))
-
-    batch = spark.read.parquet(pages_dir)
-    batch.limit(100).write.mode("append").parquet(src)
-    stream = streaming.first_seen_texts(
-        streaming.stream_extract(streaming.stream_pages(spark, src)))
-    _drain(stream, out, ckpt)
-    n1 = spark.read.parquet(out).count()
-    assert n1 == 100
-
-    # second batch: 150 rows of which 100 are the SAME urls again
-    batch.limit(150).write.mode("append").parquet(src)
-    stream = streaming.first_seen_texts(
-        streaming.stream_extract(streaming.stream_pages(spark, src)))
-    _drain(stream, out, ckpt)
-    got = spark.read.parquet(out)
-    assert got.count() == 150  # only the 50 new urls added
-    assert got.groupBy("url_canon").count() \
-        .where(F.col("count") > 1).count() == 0
 
 
 def _write_doc_file(docs_pdf, path):

@@ -1,6 +1,6 @@
 """Text-analysis / dedup operator semantics (small deterministic
-corpora; DuckDB-oracle equivalence is covered by tools/check_oracles
-and the driver's gate — these tests pin the operator semantics)."""
+corpora; DuckDB-oracle equivalence is covered by tests/test_oracles.py
+— these tests pin the operator semantics)."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -83,18 +83,6 @@ def test_simhash_hamming_properties(docs):
     assert got[(0, 1)] == 0
     if (0, 2) in got:  # near-dup, small distance when blocked together
         assert got[(0, 2)] <= 16
-
-
-def test_simhash_variants_bit_identical(docs):
-    """All three kernels — production (batch numpy + token dedup),
-    pure-JVM (explode → codegen bit-sums), and the round-1 pandas
-    loop — must produce identical bits."""
-    a = {r.doc_id: r.simhash64 for r in textops.simhash(docs).collect()}
-    b = {r.doc_id: r.simhash64 for r in
-         textops.simhash_pandas(docs).collect()}
-    c = {r.doc_id: r.simhash64 for r in
-         textops.simhash_jvm(docs).collect()}
-    assert a == b == c
 
 
 def test_simhash_matches_pure_python(docs):

@@ -1,22 +1,31 @@
-"""Local replica of the driver's correctness gate: run every
-``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB over
-the same parquet tables; compare row counts, column names, and
-order-insensitive value hashes.
+"""Oracle gate: run every ``queries()`` entry on Spark and its
+``oracle_sql()`` on DuckDB over the same parquet tables; compare
+column names, row counts and order-insensitive value hashes.
+``tests/test_oracles.py`` runs the same comparison inside the test
+suite.
 
 Usage: python tools/check_oracles.py [sf_dir] [only_query_name]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
 TABLES = ("region nation customer supplier part orders lineitem "
           "events documents embeddings").split()
+
+
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per test table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * "
+                    f"FROM '{sf_dir}/{t}.parquet'")
+    return con
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -29,64 +38,55 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def mismatch(got: pd.DataFrame, want: pd.DataFrame) -> str | None:
+    """Why the Spark result ``got`` differs from the oracle's ``want``
+    (columns, row count or value hash), or None when they match."""
+    g, w = normalize(got), normalize(want)
+    if list(g.columns) != list(w.columns):
+        return f"columns {list(g.columns)} vs {list(w.columns)}"
+    if len(g) != len(w):
+        return f"rows {len(g)} vs {len(w)}"
+    gh = pd.util.hash_pandas_object(g.astype(str), index=False).sum()
+    wh = pd.util.hash_pandas_object(w.astype(str), index=False).sum()
+    if gh != wh:
+        diff = g.compare(w)
+        return "value hash mismatch" + (
+            "" if diff.empty else "\n" + str(diff.head(5)))
+    return None
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2] if len(sys.argv) > 2 else None
 
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from frontier.spark.session import get_spark
 
     spark = get_spark(app="oracle-check", cores=8, shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * "
-                    f"FROM '{sf_dir}/{t}.parquet'")
-
+    con = connect(sf_dir)
     qs, os_ = entrymod.queries(), entrymod.oracle_sql()
+    names = [n for n in qs if not only or n == only]
     failures = []
-    for name, fn in qs.items():
-        if only and name != only:
-            continue
+    for name in names:
         try:
-            got = fn(spark, sf_dir).toPandas()
+            got = qs[name](spark, sf_dir).toPandas()
+            why = (mismatch(got, con.execute(os_[name]).df())
+                   if name in os_ else None)
         except Exception as exc:  # noqa: BLE001
+            why = f"error {exc}"
+        if why is not None:
             failures.append(name)
-            print(f"FAIL  {name}: spark error {exc}")
-            continue
-        if name not in os_:
-            print(f"rows  {name}: {len(got)} rows (no oracle, rows-only)")
-            continue
-        try:
-            want = con.execute(os_[name]).df()
-        except Exception as exc:  # noqa: BLE001
-            failures.append(name)
-            print(f"FAIL  {name}: duckdb error {exc}")
-            continue
-        g, w = normalize(got), normalize(want)
-        if list(g.columns) != list(w.columns):
-            failures.append(name)
-            print(f"FAIL  {name}: columns {list(g.columns)} vs "
-                  f"{list(w.columns)}")
-            continue
-        if len(g) != len(w):
-            failures.append(name)
-            print(f"FAIL  {name}: rows {len(g)} vs {len(w)}")
-            continue
-        gh = pd.util.hash_pandas_object(g.astype(str), index=False).sum()
-        wh = pd.util.hash_pandas_object(w.astype(str), index=False).sum()
-        if gh != wh:
-            failures.append(name)
-            diff = g.compare(w) if g.shape == w.shape else None
-            print(f"FAIL  {name}: value hash mismatch")
-            if diff is not None and not diff.empty:
-                print(diff.head(5))
+            print(f"FAIL  {name}: {why}")
+        elif name in os_:
+            print(f"OK    {name}: {len(got)} rows")
         else:
-            print(f"OK    {name}: {len(g)} rows")
-    print()
+            print(f"rows  {name}: {len(got)} rows (no oracle, rows-only)")
+    print(f"\n{len(names) - len(failures)}/{len(names)} queries pass")
     if failures:
         print("FAILURES:", failures)
         sys.exit(1)
-    print("all queries match their oracles")
 
 
 if __name__ == "__main__":

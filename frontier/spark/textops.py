@@ -1364,9 +1364,6 @@ def substring_index(docs: DataFrame, k: int = 50,
     POSITIONS are bit-identical to every other token consumer —
     the kernel only ever sees the already-split token arrays.
     """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     t = F.coalesce(F.col(text_col), F.lit(""))
     w = F.filter(F.split(F.lower(F.trim(t)), r"\s+"),
                  lambda x: x != F.lit(""))
@@ -1379,24 +1376,41 @@ def substring_index(docs: DataFrame, k: int = 50,
                 continue
             doc_ids = b.column(0).to_numpy(zero_copy_only=False) \
                 .astype(np.int64)
-            lens, nw, s_local, w1, w2 = _rolling_lanes(b.column(1), kk)
-            m = len(s_local)
-            if m == 0:
-                continue
-            hb = np.empty((m, 2), dtype=">u8")
-            hb[:, 0], hb[:, 1] = w1, w2
-            h_offsets = (np.arange(m + 1, dtype=np.int32) * 16)
-            h_arr = pa.Array.from_buffers(
-                pa.binary(), m,
-                [None, pa.py_buffer(h_offsets.tobytes()),
-                 pa.py_buffer(hb.tobytes())])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.repeat(doc_ids, nw), pa.int64()),
-                 pa.array(s_local.astype(np.int32), pa.int32()),
-                 h_arr],
-                ["doc_id", "s", "h"])
+            _lens, nw, s_local, w1, w2 = _rolling_lanes(b.column(1), kk)
+            yield from _window_batches(doc_ids, nw, s_local, w1, w2)
 
     return base.mapInArrow(shingle, "doc_id bigint, s int, h binary")
+
+
+# Arrow ``binary`` offsets are int32, so one array holds at most
+# 2**31 - 1 bytes: this many 16-byte window hashes
+_MAX_WINDOWS = (2**31 - 1) // 16
+
+
+def _window_batches(doc_ids, nw, s_local, w1, w2,
+                    limit: int = _MAX_WINDOWS):
+    """``(doc_id, s, h)`` record batches for one input batch's
+    windows (``_rolling_lanes`` output; ``nw[i]`` windows of row
+    ``doc_ids[i]``), cut into slices of at most ``limit`` windows so
+    each ``h`` array's int32 offsets stay in range. A slice may end
+    mid-document: every window is its own row."""
+    import pyarrow as pa
+
+    m = len(s_local)
+    doc_col = np.repeat(doc_ids, nw)
+    hb = np.empty((m, 2), dtype=">u8")
+    hb[:, 0], hb[:, 1] = w1, w2
+    for lo in range(0, m, limit):
+        hi = min(lo + limit, m)
+        h_offsets = np.arange(hi - lo + 1, dtype=np.int32) * 16
+        h_arr = pa.Array.from_buffers(
+            pa.binary(), hi - lo,
+            [None, pa.py_buffer(h_offsets), pa.py_buffer(hb[lo:hi])])
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(doc_col[lo:hi], pa.int64()),
+             pa.array(s_local[lo:hi].astype(np.int32), pa.int32()),
+             h_arr],
+            ["doc_id", "s", "h"])
 
 
 def _rolling_lanes(wcol, k: int):

@@ -6,8 +6,9 @@ the crawl:
         --sf-dir /root/testdata/sf0.01 --out /tmp/curated \
         [--from-crawl /tmp/crawl_state] [--html-wrapped]
 
-Stages (each an operator from frontier/spark/textops.py, all fused
-into ONE Spark plan — flags are columns, not separate passes):
+Stages (each an operator from frontier/spark/textops.py; flags are
+columns of ONE selection plan, not separate passes, and every gate
+reads the corpus ``build_flags`` materialized once):
 
 1. optional HTML tag-strip (``html_clean``) when the text column
    carries markup;
@@ -81,11 +82,14 @@ def apply_substr_dedup(docs, k: int, min_count: int = 2):
     from frontier.spark import textops
 
     sd = textops.substring_dedup(docs, k=k, min_count=min_count)
+    # emptied docs drop out through an explode of a 0-or-1-element
+    # array, not a Filter: Catalyst pushes a Filter on the kernel's
+    # output below the projection that computes it, which plans the
+    # `rebuild` UDF twice over the same rows
+    kept = sd.select("doc_id", F.explode(F.array_remove(
+        F.array("clean_text"), "")).alias("text"))
     return (docs.select("doc_id", "lang")
-            .join(sd.where(F.col("clean_text") != "")
-                  .select("doc_id",
-                          F.col("clean_text").alias("text")),
-                  "doc_id")
+            .join(kept, "doc_id")
             .select("doc_id", "text", "lang"))
 
 
@@ -100,6 +104,14 @@ def build_flags(docs, *, max_dup_para: float = 0.5,
     Returns ``(flagged, flag_cols)``: ``flagged`` is docs plus one
     boolean per gate (all joined into ONE plan); the caller filters
     on every flag to select.
+
+    ``docs`` is materialized once (an eager ``localCheckpoint``)
+    before any gate reads it. Every gate is a separate subtree over
+    ``docs``, and Spark does not share subtrees, so a lazy input is
+    recomputed per gate: over ``apply_substr_dedup`` output, one
+    curate pass ran the ``rebuild`` UDF in 21 Python nodes. Like
+    ``dedup_clusters``' checkpoints, the blocks are freed when the
+    frame is garbage-collected.
 
     ``eval_docs``: held-out benchmark relation (text column) for the
     decontamination gate; None falls back to the deterministic
@@ -126,6 +138,7 @@ def build_flags(docs, *, max_dup_para: float = 0.5,
 
     from frontier.spark import textops
 
+    docs = docs.localCheckpoint(eager=True)
     # fuzzy dedup (the NearDup stage real pipelines run between exact
     # dedup and decontamination): minhash → LSH banding candidates →
     # exact Jaccard verify → connected components. dedup_clusters is
@@ -480,6 +493,9 @@ def main():
         lang_aware=args.lm_per_lang,
         quality_model=quality_model,
         quality_min=args.quality_min)
+    # the parquet write and the per-gate counts both read this one
+    # materialization instead of each running every gate
+    flagged = flagged.localCheckpoint(eager=True)
     keep = flagged
     for n in flag_cols:
         keep = keep.where(F.col(n))

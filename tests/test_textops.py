@@ -1142,26 +1142,87 @@ def test_substring_dedup_plan_shape(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_curate_substr_rewrite_stage(spark):
+_BOILERPLATE = " ".join(f"b{i}" for i in range(10))
+
+
+@pytest.fixture(scope="module")
+def boilerplate_docs(spark):
+    return spark.createDataFrame(
+        [(0, f"real content words here {_BOILERPLATE}", "en"),
+         (1, f"{_BOILERPLATE} more real prose follows", "en"),
+         (2, _BOILERPLATE, "en"),     # pure boilerplate: drops out
+         (3, "unique text kept as is", "en")],
+        "doc_id long, text string, lang string")
+
+
+def test_curate_substr_rewrite_stage(boilerplate_docs):
     """--substr-k: the ExactSubstr rewrite runs BEFORE the gates —
     boilerplate spans vanish from the text the gates score, and a
     doc that was nothing but boilerplate drops out of the corpus."""
     from jobs.curate import apply_substr_dedup
 
-    shared = " ".join(f"b{i}" for i in range(10))
-    docs = spark.createDataFrame(
-        [(0, f"real content words here {shared}", "en"),
-         (1, f"{shared} more real prose follows", "en"),
-         (2, shared, "en"),           # pure boilerplate: drops out
-         (3, "unique text kept as is", "en")],
-        "doc_id long, text string, lang string")
     got = {r.doc_id: r for r in
-           apply_substr_dedup(docs, k=8).collect()}
+           apply_substr_dedup(boilerplate_docs, k=8).collect()}
     assert set(got) == {0, 1, 3}
     assert got[0].text == "real content words here"
     assert got[1].text == "more real prose follows"
     assert got[3].text == "unique text kept as is"
     assert all(r.lang == "en" for r in got.values())
+
+
+def test_curate_substr_rewrite_runs_rebuild_once(boilerplate_docs):
+    """The rewrite's executed plan evaluates the ``rebuild`` kernel
+    in exactly one Python node: dropping the emptied doc must not
+    push a second evaluation of the UDF below its projection."""
+    from jobs.curate import apply_substr_dedup
+
+    out = apply_substr_dedup(boilerplate_docs, k=8)
+    assert {r.doc_id for r in out.collect()} == {0, 1, 3}
+    # the adaptive plan's final physical plan, after execution
+    plan = out._jdf.queryExecution().executedPlan() \
+        .executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_curate_gates_read_materialized_input(spark):
+    """build_flags materializes its input once: over the ExactSubstr
+    rewrite, the selection plan reads that materialization, so no
+    gate re-runs the shingle or rebuild kernels."""
+    from jobs.curate import apply_substr_dedup, build_flags
+
+    docs = spark.createDataFrame(
+        [(i, f"some tokens about topic {i % 3} repeated here for "
+             f"the gate {i} {_BOILERPLATE}", "en") for i in range(30)],
+        "doc_id long, text string, lang string")
+    flagged, _ = build_flags(apply_substr_dedup(docs, k=8))
+    plan = flagged._jdf.queryExecution().executedPlan().toString()
+    assert "rebuild(" not in plan and "shingle(" not in plan, plan
+    assert flagged.count() == 30
+
+
+def test_window_batches_slice_below_limit():
+    """The shingle kernel cuts its windows into batches of at most
+    ``limit`` rows (Arrow binary offsets are int32: 16-byte hashes
+    overflow past 134,217,727 windows); the slices, concatenated,
+    equal the unsliced output, including a slice boundary inside a
+    document and a row with no window."""
+    import numpy as np
+    import pyarrow as pa
+
+    wcol = pa.array([[f"t{j % 4}" for j in range(n)]
+                     for n in (7, 2, 5, 0, 9)],
+                    pa.list_(pa.string()))
+    doc_ids = np.array([10, 11, 12, 13, 14], dtype=np.int64)
+    _lens, nw, s, w1, w2 = textops._rolling_lanes(wcol, 3)
+    whole = list(textops._window_batches(doc_ids, nw, s, w1, w2))
+    assert len(whole) == 1 and whole[0].num_rows == int(nw.sum()) == 15
+    sliced = list(textops._window_batches(doc_ids, nw, s, w1, w2,
+                                          limit=4))
+    assert [b.num_rows for b in sliced] == [4, 4, 4, 3]
+    assert all(b.schema == whole[0].schema for b in sliced)
+    assert pa.Table.from_batches(sliced).equals(
+        pa.Table.from_batches(whole))
+    assert textops._MAX_WINDOWS * 16 <= 2**31 - 1
 
 
 def test_dsir_weights_exact_math(spark):

@@ -54,6 +54,21 @@ def with_url_canon(df: DataFrame, url_col: str = "url") -> DataFrame:
     return df.withColumn("url_canon", _canon_udf()(F.col(url_col)))
 
 
+def with_valid_url_canon(df: DataFrame, url_col: str = "url") -> DataFrame:
+    """:func:`with_url_canon` without the rows whose URL does not
+    canonicalize, with the UDF evaluated once per row.
+
+    The NULL rows drop out through an explode of a 0-or-1-element
+    array, not a ``Filter``: Catalyst pushes a filter on the UDF's
+    output below the projection that computes it, which plans the UDF
+    twice over the same rows ("Accelerating Python UDFs in Vectorized
+    Query Execution", CIDR 2022, counts each crossing as cost)."""
+    keep = [c for c in df.columns if c != "url_canon"]
+    return with_url_canon(df, url_col).select(
+        *keep,
+        F.explode(F.array_compact(F.array("url_canon"))).alias("url_canon"))
+
+
 def canon_host(canon_col: str = "url_canon"):
     """Column: the host of a CANONICAL URL (lowercase scheme, no
     userinfo), "" where absent. Raw URLs take urlcanon.host_expr."""
@@ -303,10 +318,10 @@ def schedule(frontier: DataFrame, robots: DataFrame | None,
     Input needs (url, priority, warc_ts); output adds url_canon, host,
     host_bucket, salt, robots_allowed, rank_in_host — fetch-ordered.
     """
-    staged = frontier
-    if "url_canon" not in staged.columns:
-        staged = with_url_canon(staged)
-    staged = staged.where(F.col("url_canon").isNotNull())
+    if "url_canon" in frontier.columns:
+        staged = frontier.where(F.col("url_canon").isNotNull())
+    else:
+        staged = with_valid_url_canon(frontier)
     if "host" not in staged.columns:
         staged = with_host(staged)
     if robots is not None:

@@ -59,6 +59,16 @@ def get_spark(app: str = "frontier",
         # found crawl flat and curate slower in both: setup_s +12 % and
         # +3 %, cold_s +6 % and +3 %.
         .config("spark.sql.constraintPropagation.enabled", "false")
+        # Generated-class cache (a static conf, JVM-wide). Measured
+        # with perfbench/run.py (seed 101, 4 cores) and Spark's
+        # CodegenMetrics compile count: with a cache that never fills,
+        # a whole crawl session compiles 265 classes (the last steady
+        # round 2) and a curate session 261. At the default 100
+        # entries the LRU thrashed: the steady crawl rounds compiled
+        # 121 and 114 classes and the steady curate pass 311. 512 is
+        # about twice the larger session count; 512 and 100000 gave
+        # the same counts.
+        .config("spark.sql.codegen.cache.maxEntries", "512")
         # 128 MiB parquet split targets — at 100 TB this yields ~800k
         # input tasks, the right granularity for 1000 executors
         .config("spark.sql.files.maxPartitionBytes", "134217728")

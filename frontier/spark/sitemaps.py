@@ -192,9 +192,8 @@ def sitemap_offers(entries: DataFrame) -> DataFrame:
     exchange."""
     from frontier.spark import schedule
 
-    canon = schedule.with_url_canon(
-        entries.where(~F.col("is_child")), "loc") \
-        .where(F.col("url_canon").isNotNull())
+    canon = schedule.with_valid_url_canon(
+        entries.where(~F.col("is_child")), "loc")
     prio = F.round((1.0 - F.coalesce(F.col("priority"), F.lit(0.5)))
                    * 10).cast("int")
     ts = F.timestamp_micros(F.coalesce(F.col("lastmod_us"), F.lit(0)))

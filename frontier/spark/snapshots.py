@@ -11,8 +11,18 @@ Manifest layout::
 
     <root>/
       snapshot-0.json        {snapshot_id, parent_id, tables, metrics,
-                              lineage: {table: {n_rows, n_files, files}}}
+                              lineage: {table: {n_rows, n_files, files,
+                                                file_rows, schema}}}
       data/snap-0/<table>/   parquet
+
+Each table's lineage entry records the schema of the DataFrame that
+was written (Spark's JSON form). ``read`` hands it to
+``spark.read.schema``, so opening a snapshot runs no schema-inference
+job; Delta Lake keeps the table schema in its log's ``metaData``
+action for the same reason. Spark reads parquet with every field
+nullable either way, so the read schema equals the inferred one.
+Manifests written before schemas were recorded still read, by
+inference.
 
 Commits are atomic: the manifest is written to a temp file then
 ``os.replace``d into place; a crashed commit leaves data files but no
@@ -29,6 +39,22 @@ import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def _written(path: str, df: DataFrame) -> dict:
+    """Lineage entry of ``df`` just written to ``path``: per-file row
+    counts from the parquet FOOTERS (pyarrow metadata, driver-side,
+    zero Spark jobs) and the schema the files hold."""
+    import pyarrow.parquet as pq
+
+    files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    # per-partition lineage: one (file, n_rows) pair per task
+    per_file = {f: pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+                for f in files}
+    return {"n_files": len(files), "files": files, "file_rows": per_file,
+            "n_rows": sum(per_file.values()),
+            "schema": df.schema.jsonValue()}
 
 
 class SnapshotStore:
@@ -67,7 +93,8 @@ class SnapshotStore:
         parquet FOOTERS (pyarrow metadata, driver-side, zero Spark
         jobs) — the old read-back ``.count()`` per table recomputed
         nothing but cost one full job each, the dominant serial driver
-        work in the crawl loop.
+        work in the crawl loop. Each table's schema comes from its
+        DataFrame, which already knows it.
 
         ``metrics`` values may be callables: resolved as
         ``fn(lineage)`` after the writes, so callers can derive
@@ -90,8 +117,6 @@ class SnapshotStore:
         """
         from concurrent.futures import ThreadPoolExecutor
 
-        import pyarrow.parquet as pq
-
         parent = self.latest_id()
         snap_id = 0 if parent is None else parent + 1
         parent_man = self.manifest(parent) if parent is not None else None
@@ -103,18 +128,7 @@ class SnapshotStore:
             path = os.path.join(self.root, "data",
                                 f"snap-{snap_id}", name)
             df.write.mode("overwrite").parquet(path)
-            files = sorted(
-                f for f in os.listdir(path) if f.endswith(".parquet"))
-            # per-partition lineage: one (file, n_rows) pair per task
-            per_file = {
-                f: pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in files}
-            return name, path, {
-                "n_files": len(files),
-                "files": files,
-                "file_rows": per_file,
-                "n_rows": sum(per_file.values()),
-            }
+            return name, path, _written(path, df)
 
         # CONCURRENT table writes (round-4, r3 VERDICT item 3): each
         # write is an independent Spark job into its own directory,
@@ -179,12 +193,22 @@ class SnapshotStore:
     # -- read / time travel ---------------------------------------------
     def read(self, spark: SparkSession, table: str,
              snapshot_id: int | None = None) -> DataFrame | None:
+        """``table`` as of ``snapshot_id`` (default: the latest), or
+        None when that snapshot has no such table. The schema comes
+        from the manifest, as Delta Lake reads it from the log's
+        ``metaData``, so the read launches no Spark job; parquet
+        schema inference would run one per call. A manifest written
+        before schemas were recorded falls back to inference."""
         man = self.manifest(snapshot_id)
         if man is None or table not in man["tables"]:
             return None
         entry = man["tables"][table]
         paths = entry if isinstance(entry, list) else [entry]
-        return spark.read.parquet(*paths)
+        reader = spark.read
+        schema = man["lineage"][table].get("schema")
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(*paths)
 
     def rollback(self, to_snapshot_id: int) -> None:
         """Drop manifests newer than ``to_snapshot_id`` (data files are
@@ -263,23 +287,13 @@ class SnapshotStore:
         snap_id = self.latest_id() + 1
         path = os.path.join(self.root, "data", f"snap-{snap_id}",
                             f"{table}-rewrite")
-        spark.read.parquet(*entry).write.mode("overwrite").parquet(path)
-        import pyarrow.parquet as pq
-        files = sorted(
-            f for f in os.listdir(path) if f.endswith(".parquet"))
-        per_file = {
-            f: pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in files}
+        merged = self.read(spark, table, man["snapshot_id"])
+        merged.write.mode("overwrite").parquet(path)
         tables_out = dict(man["tables"])
         tables_out[table] = [path]
         lineage = dict(man["lineage"])
-        lineage[table] = {
-            "n_files": len(files), "files": files,
-            "file_rows": per_file,
-            "n_rows": sum(per_file.values()),
-            "delta_rows": 0,
-            "rewritten_from": len(entry),
-        }
+        lineage[table] = {**_written(path, merged), "delta_rows": 0,
+                          "rewritten_from": len(entry)}
         manifest = {
             "snapshot_id": snap_id,
             "parent_id": man["snapshot_id"],

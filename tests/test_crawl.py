@@ -328,6 +328,57 @@ def test_crawl_releases_cached_blocks(spark, corpus, tmp_path):
     assert not leaked, f"crawl leaked cached RDDs: {leaked}"
 
 
+def test_crawl_reads_state_only_between_rounds(spark, corpus, tmp_path,
+                                              monkeypatch):
+    """The committed state is read back only when another round
+    follows: a 2-round crawl reads the four state tables once."""
+    _, page_index, seeds, robots = corpus
+    reads = []
+    real = SnapshotStore.read
+
+    def counted(self, spark_, table, snapshot_id=None):
+        reads.append(table)
+        return real(self, spark_, table, snapshot_id)
+
+    monkeypatch.setattr(SnapshotStore, "read", counted)
+    store = SnapshotStore(str(tmp_path / "reads"))
+    crawl.crawl(spark, page_index, seeds, robots, store,
+                budget_per_host=BUDGET, max_rounds=2, num_buckets=8)
+    assert store.latest_id() == 1
+    assert sorted(reads) == ["blocked", "frontier", "seen_bloom",
+                             "seen_exact"]
+
+
+def _python_nodes(df) -> int:
+    """ArrowEvalPython nodes in ``df``'s final executed plan."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().executedPlan() \
+        .toString().count("ArrowEvalPython")
+
+
+def test_discovery_canonicalizes_each_link_once(spark):
+    """Discovery and seeding run the canon UDF in ONE Python node:
+    dropping URLs that do not canonicalize must not push a second
+    evaluation of the UDF below its projection."""
+    fetched = spark.createDataFrame(
+        [(0, None, ["http://A.com/x?b=1&a=2", "not a url", "", None]),
+         (1, None, ["http://a.com/x?a=2&b=1", "http://b.org/"])],
+        "priority int, page_ts timestamp, links array<string>")
+    offers = crawl._discover(fetched)
+    assert _python_nodes(offers) == 1
+    assert sorted((r.url_canon, r.priority) for r in offers.collect()) \
+        == [("http://a.com/x?a=2&b=1", 1), ("http://b.org/", 2)]
+
+    seeds = spark.createDataFrame(
+        [("http://A.com/x", 0, 1), ("not a url", 0, 2),
+         ("http://a.com/x", 1, 0)],
+        "url string, priority int, source_rank long")
+    frontier = crawl._seed_frontier(seeds)
+    assert _python_nodes(frontier) == 1
+    assert [(r.url_canon, r.priority) for r in frontier.collect()] \
+        == [("http://a.com/x", 1)]
+
+
 def test_ckpt_replicated_storage_level(spark, monkeypatch):
     """FRONTIER_CKPT_REPLICATED=1 must store round state at
     MEMORY_AND_DISK_2 so a cluster commit survives one executor loss

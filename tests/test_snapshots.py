@@ -163,3 +163,87 @@ def test_rewrite_append_table(spark, tmp_path):
         _os.path.join(store.root, "data", "snap-0", "seen"))
     got2 = {r.url_canon for r in store.read(spark, "seen").collect()}
     assert got2 == got | {"u-new"}
+
+
+def _jobs_during(spark, fn):
+    """(fn(), ids of the Spark jobs fn launched on this thread)."""
+    sc = spark.sparkContext
+    group = f"jobs-during-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_launches_no_job(spark, store):
+    """A snapshot read takes its schema from the manifest: no parquet
+    schema-inference job runs (inference ran one per read)."""
+    df, jobs = _jobs_during(
+        spark, lambda: store.read(spark, "results", snapshot_id=2))
+    assert jobs == []
+    assert df.count() == 5
+
+
+def test_read_returns_committed_schema(spark, tmp_path):
+    """``read`` applies the schema the manifest recorded at commit,
+    and returns what parquet inference finds in the files: for a
+    plain table with nested and non-nullable columns, an append
+    chain, an empty table and a rewritten append table."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.types import StructType
+
+    store = SnapshotStore(str(tmp_path / "schemas"))
+    plain = spark.range(3).select(
+        F.col("id"), F.lit(7).alias("round"),
+        F.array(F.struct(F.lit("a").alias("pat"),
+                         F.lit(True).alias("allow"))).alias("rules"),
+        F.timestamp_micros(F.lit(0)).alias("warc_ts"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"))
+    for rnd in range(3):
+        store.commit({
+            "plain": plain,
+            "seen": spark.createDataFrame([(f"u{rnd}",)],
+                                          "url_canon string"),
+            "empty": spark.createDataFrame([], "url_canon string, n int"),
+        }, {"round": rnd}, append={"seen"})
+    store.rewrite_append_table(spark, "seen")
+    store.commit({"seen": spark.createDataFrame(
+        [("u3",)], "url_canon string")}, {"round": 3}, append={"seen"})
+
+    cases = [(2, "plain"), (2, "seen"), (2, "empty"), (3, "seen"),
+             (4, "seen")]
+    for sid, table in cases:
+        man = store.manifest(sid)
+        recorded = StructType.fromJson(man["lineage"][table]["schema"])
+        entry = man["tables"][table]
+        paths = entry if isinstance(entry, list) else [entry]
+        inferred = spark.read.parquet(*paths).schema
+        got = store.read(spark, table, sid)
+        assert got.schema == inferred, (sid, table)
+        # the recorded schema up to nullability, which parquet drops
+        assert recorded.simpleString() == inferred.simpleString()
+        assert sorted(got.collect()) \
+            == sorted(spark.read.parquet(*paths).collect()), (sid, table)
+    assert store.manifest(3)["lineage"]["seen"]["rewritten_from"] == 3
+    assert store.read(spark, "empty", 2).count() == 0
+
+
+def test_read_manifest_without_schema(spark, store):
+    """A manifest written before schemas were recorded still reads,
+    by inference, with the same schema and rows."""
+    import json
+
+    want = store.read(spark, "results", 1)
+    path = store._manifest_path(1)
+    with open(path) as handle:
+        man = json.load(handle)
+    for line in man["lineage"].values():
+        del line["schema"]
+    with open(path, "w") as handle:
+        json.dump(man, handle)
+    got = store.read(spark, "results", 1)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
